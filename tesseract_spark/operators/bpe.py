@@ -245,12 +245,6 @@ def merges_table(spark, merges: list[tuple[str, str]]) -> DataFrame:
     )
 
 
-def bpe_vocab(merges: list[tuple[str, str]]) -> list[str]:
-    """The subword vocabulary the merges induce (merge products in rank
-    order; single characters come from the data at encode time)."""
-    return [a + b for a, b in merges]
-
-
 def merges_oracle_sql() -> str:
     """DuckDB oracle for ``q_bpe_merges`` (VERDICT r9 #1): the merge loop
     is a pure function of the bit-exactly-oracled word-frequency table

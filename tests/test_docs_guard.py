@@ -10,25 +10,25 @@ the code so the pair can only change together.
 from __future__ import annotations
 
 import pathlib
-import re
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 SKILL = REPO / ".claude" / "skills" / "verify" / "SKILL.md"
 SESSION = REPO / "tesseract_spark" / "session.py"
+APP = REPO / "tesseract_spark" / "server" / "app.py"
 
 
 def test_verify_skill_scheduler_line_matches_session_default():
+    """The FAIR per-request pools are gone: get_spark sets no scheduler mode
+    and reads no scheduler knob (Spark's FIFO default), the server assigns
+    no pool, and the skill documents neither the knob nor a FAIR mode."""
     src = SESSION.read_text()
-    m = re.search(
-        r"os\.environ\.get\(\s*\"SPARK_GRAFT_SCHEDULER\",\s*\"(\w+)\"\s*\)", src
-    )
-    assert m, "session.py no longer reads SPARK_GRAFT_SCHEDULER — update this guard"
-    default = m.group(1)
-    assert default == "FIFO"
+    assert "spark.scheduler.mode" not in src
+    assert "SPARK_GRAFT_SCHEDULER" not in src
+    assert "spark.scheduler.pool" not in APP.read_text()
 
     skill = SKILL.read_text()
-    # the skill must state the real default and must NOT claim FAIR is set
-    assert f"`spark.scheduler.mode` defaults to {default}" in skill
+    assert "default FIFO" in skill
+    assert "SPARK_GRAFT_SCHEDULER" not in skill
     assert "`spark.scheduler.mode=FAIR` is set" not in skill
 
 

@@ -438,6 +438,51 @@ def test_single_flight_coalesces_identical_inflight_requests(builder):
         srv.shutdown()
 
 
+def test_flush_during_inflight_request_does_not_poison_cache(builder):
+    """A request in flight across /flush must not publish its pre-flush
+    body: the registry generation is part of the response-cache and
+    single-flight keys, so the same URL after the flush misses the cache
+    and runs the engine again."""
+    import time
+
+    from tesseract_spark.server.app import make_server
+
+    class SlowEngine:
+        def __init__(self, inner):
+            self.inner = inner
+            self.calls = 0
+
+        def dataframe(self, cube, q):
+            self.calls += 1
+            time.sleep(1.0)  # hold request A open across the flush
+            return self.inner.dataframe(cube, q)
+
+    eng = SlowEngine(builder)
+    srv = make_server(builder, port=0, navigator=eng)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        base = f"http://127.0.0.1:{srv.server_address[1]}"
+        url = (
+            base + "/cubes/lineitem_sales/aggregate.jsonrecords"
+            "?drilldowns=Return+Flag.Return+Flag&measures=Quantity&limit=3"
+        )
+        a = threading.Thread(target=_get, args=(url,))
+        a.start()
+        deadline = time.monotonic() + 30
+        while eng.calls == 0 and time.monotonic() < deadline:
+            time.sleep(0.01)
+        assert eng.calls == 1, "request A never reached the engine"
+        assert json.loads(_get(base + "/flush")) == {"flushed": True}
+        a.join(timeout=120)
+        with urllib.request.urlopen(url, timeout=120) as r:
+            assert r.read()
+            assert r.headers.get("X-Cache") is None
+        assert eng.calls == 2, "post-flush request was served pre-flush data"
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
 def test_single_flight_stale_leader_reclaimed():
     """ADVICE r13: a leader that dies between begin() and its try/finally
     must not poison the key forever — begin() reclaims leadership once the
