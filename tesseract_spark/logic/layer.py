@@ -122,7 +122,7 @@ class LogicLayer:
                 continue
             if ":" in token:
                 member, op = token.rsplit(":", 1)
-                member_typed = self._typed(cube, ln, member)
+                member_typed = self.builder.member_literal(cube, ln, member)
                 # geo-typed dims route relations through the geoservice when
                 # configured (geoservice.rs:29-74: resolved IDs are inlined)
                 from ..schema.model import DimensionType
@@ -157,17 +157,6 @@ class LogicLayer:
         if plain:
             cuts.append(Cut(ln, tuple(plain)))
         return cuts
-
-    def _typed(self, cube: Cube, ln: LevelName, member: str):
-        ref = self.builder.resolve_level(cube, ln)
-        from ..schema.model import MemberType
-
-        if ref.level.key_type is MemberType.NONTEXT:
-            try:
-                return int(member)
-            except ValueError:
-                return float(member)
-        return member
 
     # ---------------- time= resolution ----------------
 
@@ -229,7 +218,7 @@ class LogicLayer:
         lmap = self.level_map(cube)
         ln = lmap.get(level) or LevelName.parse(level)
         cache = self.cache(cube)
-        m = self._typed(cube, ln, member)
+        m = self.builder.member_literal(cube, ln, member)
         out: list[dict] = []
         for parent_ln, pid in cache.parents(ln, m):
             out.append(
@@ -321,9 +310,6 @@ class LogicLayer:
 
         from pyspark.sql import functions as F
 
-        from ..plans.builder import level_key_alias
-        from ..query.model import Mask
-
         if (
             q.growth is not None
             or q.rca is not None
@@ -357,10 +343,8 @@ class LogicLayer:
         mult = None
         for d in multi_dims:
             m_d = None
-            for ln, cut in dim_cuts[d].items():
-                ref = self.builder.resolve_level(cube, ln)
-                lits = self.builder._member_literals(ref.level, cut.members)
-                hit = F.col(level_key_alias(ref.level)).isin(lits).cast("int")
+            for cut in dim_cuts[d].values():
+                hit = self.builder.alias_cut(cube, cut).cast("int")
                 m_d = hit if m_d is None else m_d + hit
             mult = m_d if mult is None else mult * m_d
         # array_repeat, NOT sequence(1, mult): sequence defaults to step -1
@@ -380,78 +364,39 @@ class LogicLayer:
         cube = self.resolve_cube(params.pop("cube"))
         lmap = self.level_map(cube)
 
-        q = Query()
         drills = params.pop("drilldowns", "")
+        meas = params.pop("measures", "")
+        time = params.pop("time", None)
+        exclude = params.pop("exclude", None)
+        # params that name a level are flattened cuts (below); a ``cuts``
+        # param is not part of the /data surface. Every other param is an
+        # aggregate option, parsed exactly as the aggregate endpoint does.
+        level_params = {k: params.pop(k) for k in list(params) if k in lmap}
+        params.pop("cuts", None)
+        q = Query.from_params(params)
+
         drill_names = drills if isinstance(drills, list) else [
             d for d in str(drills).split(",") if d
         ]
         for d in drill_names:
             d = d.strip()
             q.drilldowns.append(lmap[d] if d in lmap else LevelName.parse(d))
-        meas = params.pop("measures", "")
         q.measures = (
             meas if isinstance(meas, list) else [m.strip() for m in str(meas).split(",") if m]
         )
 
-        if "time" in params:
-            q.cuts.extend(self._resolve_time(cube, params.pop("time")))
+        if time is not None:
+            q.cuts.extend(self._resolve_time(cube, time))
 
-        exclude = params.pop("exclude", None)
-
-        # pass-through standard aggregate params
-        from ..query.model import (
-            FilterQuery,
-            GrowthQuery,
-            LimitQuery,
-            RateQuery,
-            RcaQuery,
-            SortQuery,
-            TopQuery,
-        )
-
-        if params.get("parents"):
-            q.parents = str(params.pop("parents")).lower() in ("true", "1")
-        if params.get("sparse"):
-            q.sparse = str(params.pop("sparse")).lower() in ("true", "1")
-        if params.get("debug"):
-            q.debug = str(params.pop("debug")).lower() in ("true", "1")
-        if params.get("exclude_default_members"):
-            q.exclude_default_members = str(
-                params.pop("exclude_default_members")
-            ).lower() in ("true", "1")
-        for key, parser, attr in (
-            ("top", TopQuery.parse, "top"),
-            ("sort", SortQuery.parse, "sort"),
-            ("limit", LimitQuery.parse, "limit"),
-            ("rca", RcaQuery.parse, "rca"),
-            ("rate", RateQuery.parse, "rate"),
-        ):
-            if params.get(key):
-                setattr(q, attr, parser(str(params.pop(key))))
-        if params.get("growth"):
-            q.growth = GrowthQuery.parse(
-                str(params.pop("growth")),
-                str(params.pop("growth_div0", "inf")),
-                params.pop("growth_offset", 1),
-                str(params.pop("growth_calendar", "")).lower() in ("true", "1"),
-            )
-        for f in params.pop("filters", []) if isinstance(
-            params.get("filters"), list
-        ) else ([params.pop("filters")] if params.get("filters") else []):
-            q.filters.append(FilterQuery.parse(f))
-
-        # remaining params that name a level are flattened cuts, grouped per
+        # level-named params are flattened cuts, grouped per
         # (dimension, level) for the reference's cut-combination fan-out
         # (aggregate.rs:817-916): each dimension contributes ONE of its cut
         # levels per query; the cartesian product across dimensions yields the
         # query fan; dimensions with several cut levels auto-drill the chosen
         # level (aggregate.rs:841-845, 882-893)
         dim_cuts: dict[str, dict[LevelName, Cut]] = {}
-        for key, raw in list(params.items()):
-            target = lmap.get(key)
-            if target is None:
-                continue
-            for cut in self._resolve_cut_tokens(cube, target, key, str(raw)):
+        for key, raw in level_params.items():
+            for cut in self._resolve_cut_tokens(cube, lmap[key], key, str(raw)):
                 per = dim_cuts.setdefault(cut.level_name.dimension, {})
                 prev = per.get(cut.level_name)
                 if prev is not None:
@@ -475,16 +420,12 @@ class LogicLayer:
 
         # exclude=Level:id1,id2;Level2:... → in-plan row drops (P8)
         if exclude:
-            from pyspark.sql import functions as F
-
-            from ..plans.builder import level_key_alias
-
             for clause in str(exclude).split(";"):
                 name, _, ids = clause.partition(":")
-                ln = lmap[name.strip()]
-                ref = self.builder.resolve_level(cube, ln)
-                lits = self.builder._member_literals(
-                    ref.level, tuple(i.strip() for i in ids.split(","))
+                cut = Cut(
+                    lmap[name.strip()],
+                    tuple(i.strip() for i in ids.split(",")),
+                    Mask.EXCLUDE,
                 )
-                df = df.filter(~F.col(level_key_alias(ref.level)).isin(lits))
+                df = df.filter(self.builder.alias_cut(cube, cut))
         return df

@@ -73,7 +73,7 @@ from ..schema.aggregator import (
     WeightedSum,
 )
 from . import aggregators as agg_mod
-from .builder import level_key_alias
+from .builder import cut_alias, level_key_alias
 
 
 def _decomposable(measure, avg_grain: str) -> bool:
@@ -241,16 +241,9 @@ class AggregateNavigator:
                 "aggregate navigation needs at least one decomposable "
                 "measure in the grain (the sketch tier rides alongside)"
             )
-        q, group_cols, joined, mea_objs = self._grain_rows(
+        q, group_cols, joined, pre = self._build_partials(
             cube_name, drilldowns, part_meas, parents
         )
-        bad = [m.name for m in mea_objs if not _decomposable(m, b.avg_grain)]
-        if bad:
-            raise ValueError(
-                f"measures not decomposable for aggregate navigation: {bad}"
-            )
-        p1 = [c for m in mea_objs for c in agg_mod.pass1_cols(m, b.avg_grain)]
-        pre = joined.groupBy(*[F.col(c) for c in group_cols]).agg(*p1)
 
         columns = pre.columns
         dtypes = [dict(pre.dtypes)[c] for c in columns]
@@ -310,7 +303,6 @@ class AggregateNavigator:
         self.grains.append(grain)
         return grain
 
-
     def _build_partials(
         self,
         cube_name: str,
@@ -320,31 +312,9 @@ class AggregateNavigator:
         fact: DataFrame | None = None,
     ):
         """The grain pipeline shared by materialize (full fact) and refresh
-        (an increment): projection + dim joins + pass-1 partial aggregation.
-        Returns (query, grain group aliases, partials DataFrame)."""
-        q, group_cols, joined, mea_objs = self._grain_rows(
-            cube_name, drilldowns, measures, parents, fact
-        )
-        b = self.builder
-        bad = [m.name for m in mea_objs if not _decomposable(m, b.avg_grain)]
-        if bad:
-            raise ValueError(
-                f"measures not decomposable for aggregate navigation: {bad}"
-            )
-        p1 = [c for m in mea_objs for c in agg_mod.pass1_cols(m, b.avg_grain)]
-        pre = joined.groupBy(*[F.col(c) for c in group_cols]).agg(*p1)
-        return q, group_cols, pre
-
-    def _grain_rows(
-        self,
-        cube_name: str,
-        drilldowns: list[str],
-        measures: list[str],
-        parents: bool,
-        fact: DataFrame | None = None,
-    ):
-        """Pre-aggregation grain pipeline: projection + implicit cuts + dim
-        joins. Shared by the partial builder and the HLL sketch builder."""
+        (an increment): implicit cuts + projection + dim joins, then pass-1
+        partial aggregation. Returns (query, grain group aliases, joined
+        grain rows, partials); the joined rows also feed the HLL sketches."""
         b = self.builder
         cube = b.schema.cube(cube_name)
         params: dict = {"drilldowns": drilldowns, "measures": measures}
@@ -354,14 +324,19 @@ class AggregateNavigator:
         b._validate(cube, q)
         specs = b._drill_specs(cube, q)
         mea_objs = [cube.measure(m) for m in q.measures]
+        bad = [m.name for m in mea_objs if not _decomposable(m, b.avg_grain)]
+        if bad:
+            raise ValueError(
+                f"measures not decomposable for aggregate navigation: {bad}"
+            )
         if fact is None:
             fact = b.registry.load(cube.table)
-        fact = b._apply_cuts(cube, q, fact)  # implicit default-member cuts
-        for alias, col in b._degenerate_projection(specs).items():
-            fact = fact.withColumn(alias, col)
-        joined = b._join_dims(specs, fact)
+        # implicit default-member cuts
+        joined = b._join_fact(specs, b._apply_cuts(cube, q, fact))
         group_cols = b._group_aliases(specs)
-        return q, group_cols, joined, mea_objs
+        p1 = [c for m in mea_objs for c in agg_mod.pass1_cols(m, b.avg_grain)]
+        pre = joined.groupBy(*[F.col(c) for c in group_cols]).agg(*p1)
+        return q, group_cols, joined, pre
 
     def refresh(self, grain: MaterializedGrain, new_fact: DataFrame) -> list:
         """APPEND-ONLY incremental maintenance: fold new fact rows into the
@@ -379,7 +354,7 @@ class AggregateNavigator:
         fact — pinned by ``tests/test_aggnav.py``."""
         b = self.builder
         cube = b.schema.cube(grain.cube)
-        _, group_cols, new_partials = self._build_partials(
+        _, group_cols, joined_inc, new_partials = self._build_partials(
             grain.cube, grain.drilldowns, grain.measures, grain.parents, new_fact
         )
         # normalize column order to the grain's written layout; materialize
@@ -416,14 +391,9 @@ class AggregateNavigator:
         safe = dict(zip(grain.columns, _safe_names(grain.columns)))
         out = merged.select(*[F.col(c).alias(safe[c]) for c in grain.columns])
         spark = b.spark
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.repartition(safe[part_col]).write.mode("overwrite").partitionBy(
-                safe[part_col]
-            ).parquet(f"{grain.path}/partials")
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        out.repartition(safe[part_col]).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(safe[part_col]).parquet(f"{grain.path}/partials")
         # sketch tier: merge increment registers into the affected
         # partitions by element-wise max — the merge is EXACT (registers of
         # a union are the max of the parts), so a refreshed sketch serves
@@ -431,14 +401,6 @@ class AggregateNavigator:
         if grain.sketch_measures:
             from ..operators.sketch import hll_grouped_registers
 
-            safe_map = dict(zip(grain.columns, _safe_names(grain.columns)))
-            _, gcols, joined_inc, _ = self._grain_rows(
-                grain.cube,
-                grain.drilldowns,
-                grain.measures,
-                grain.parents,
-                new_fact,
-            )
             for i, mname in enumerate(grain.sketch_measures):
                 inc = hll_grouped_registers(
                     joined_inc,
@@ -458,23 +420,15 @@ class AggregateNavigator:
                     .localCheckpoint(eager=True)
                 )
                 out_regs = merged_regs.select(
-                    *[F.col(c).alias(safe_map[c]) for c in group_cols],
+                    *[F.col(c).alias(safe[c]) for c in group_cols],
                     "j",
                     "r",
                 )
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                )
-                try:
-                    out_regs.repartition(safe_map[part_col]).write.mode(
-                        "overwrite"
-                    ).partitionBy(safe_map[part_col]).parquet(
-                        f"{grain.path}/hll_{i}"
-                    )
-                finally:
-                    spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode", prev
-                    )
+                out_regs.repartition(safe[part_col]).write.mode(
+                    "overwrite"
+                ).option("partitionOverwriteMode", "dynamic").partitionBy(
+                    safe[part_col]
+                ).parquet(f"{grain.path}/hll_{i}")
 
         grain.n_rows = spark.read.parquet(f"{grain.path}/partials").count()
         self._write_meta(spark, grain, "overwrite")
@@ -602,10 +556,10 @@ class AggregateNavigator:
         }
         exact_names = [m for m in query.measures if m not in approx_names]
         need = set(b._group_aliases(specs))
-        cut_keys = []
-        for cut in query.cuts:
-            ref = b.resolve_level(cube, cut.level_name)
-            cut_keys.append(level_key_alias(ref.level))
+        cut_cols = [
+            cut_alias(b.resolve_level(cube, cut.level_name).level, cut)
+            for cut in query.cuts
+        ]
         # smallest covering rollup wins: fewer rows = less to rescan
         for g in sorted(self.grains, key=lambda g: g.n_rows):
             if g.cube != cube_name:
@@ -617,7 +571,7 @@ class AggregateNavigator:
                 continue
             if not approx_names <= set(g.sketch_measures):
                 continue
-            if any(k not in have for k in cut_keys):
+            if any(c not in have for c in cut_cols):
                 continue
             if _implicit_sig(b, cube, query) != g.implicit_sig:
                 continue
@@ -645,9 +599,7 @@ class AggregateNavigator:
 
         def cut_filter(frame: DataFrame) -> DataFrame:
             for cut in query.cuts:
-                ref = b.resolve_level(cube, cut.level_name)
-                key = level_key_alias(ref.level)
-                frame = frame.filter(b._cut_predicate(ref.level, cut, key))
+                frame = frame.filter(b.alias_cut(cube, cut))
             return frame
 
         df = cut_filter(self._read_partials(b.spark, g))

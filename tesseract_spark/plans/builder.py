@@ -17,10 +17,20 @@ Plan shape, scale-first:
   215-231). Costs one extra shuffle, required for the non-decomposable grain
   semantics (SURVEY.md §2.4 note).
 
-Cuts on non-fact tables become broadcast ``left_semi`` joins *before*
-aggregation — the reference's semi-join pushdown (primary_agg.rs:123-160); when
-the cut level is the hierarchy's primary key the semi-join collapses to a direct
-``fk IN (...)`` filter on the fact scan (pushed to parquet by Catalyst).
+Cuts compile here and nowhere else (the reference's query_ir.rs:180-243):
+
+- ``_cut_predicate`` is the IN / NOT-IN / LIKE predicate over given columns,
+  with members typed by the level's ``key_type`` (``_member_literals``);
+- ``_fact_cut`` says how a cut restricts fact rows: not at all, a predicate on
+  fact columns, or a dim-key frame. ``_apply_one_cut`` turns the frame into a
+  broadcast ``left_semi`` join *before* aggregation — the reference's
+  semi-join pushdown (primary_agg.rs:123-160); when the cut level is the
+  hierarchy's primary key it collapses to a direct ``fk IN (...)`` filter on
+  the fact scan (pushed to parquet by Catalyst). ``_row_match_flag`` turns it
+  into a per-row flag for conditional cuts and cut groups;
+- ``alias_cut`` is the cut over the drilled output columns, for frames that
+  already carry the level: RCA's d1 cuts, Rate's kept members, rollup
+  serving, and the logic layer's ``exclude`` and multi-cut multiplicity.
 """
 
 from __future__ import annotations
@@ -68,6 +78,18 @@ def level_key_alias(level: Level) -> str:
 
 def level_name_alias(level: Level) -> str | None:
     return level.name if level.name_column else None
+
+
+def cut_alias(level: Level, cut: Cut) -> str:
+    """The drilled output column a cut tests: the name alias for a LIKE cut
+    on a named level, else the key alias."""
+    if cut.for_match and level.name_column:
+        return level_name_alias(level)
+    return level_key_alias(level)
+
+
+#: the one scratch column of the dim-key frames cuts semi-/left-join on
+_CUT_KEY = "__cut_key"
 
 
 @dataclass
@@ -258,6 +280,7 @@ class PlanBuilder:
     # ---------------- cuts ----------------
 
     def _member_literals(self, level: Level, members: tuple[str, ...]) -> list:
+        """Member strings as the level's key literals (query_ir.rs:237-243)."""
         if level.key_type is MemberType.NONTEXT:
             out = []
             for m in members:
@@ -268,12 +291,17 @@ class PlanBuilder:
             return out
         return list(members)
 
-    def _cut_predicate(self, level: Level, cut: Cut, key_col: str) -> Column:
-        """IN / NOT-IN / LIKE predicate over a single column
+    def member_literal(self, cube: Cube, ln: LevelName, member: str):
+        """One member string as ``ln``'s key literal (cache lookups)."""
+        return self._member_literals(self.resolve_level(cube, ln).level, (member,))[0]
+
+    def _cut_predicate(
+        self, level: Level, cut: Cut, key_col: str, name_col: str | None = None
+    ) -> Column:
+        """IN / NOT-IN over ``key_col``, or LIKE over ``name_col or key_col``
         (query_ir.rs:180-234, cuts.rs:3-10)."""
         if cut.for_match:
-            # LIKE against the level's name column (query_ir.rs:193-216)
-            target = F.col(level.name_column or key_col)
+            target = F.col(name_col or key_col)
             if cut.mask is Mask.INCLUDE:
                 pred = target.like(f"%{cut.members[0]}%")
                 for m in cut.members[1:]:
@@ -286,6 +314,52 @@ class PlanBuilder:
         lits = self._member_literals(level, cut.members)
         pred = F.col(key_col).isin(lits)
         return ~pred if cut.mask is Mask.EXCLUDE else pred
+
+    def alias_cut(self, cube: Cube, cut: Cut) -> Column:
+        """``cut`` as a predicate on the drilled output columns (the
+        ``cut_alias`` column), for frames that already carry the level."""
+        level = self.resolve_level(cube, cut.level_name).level
+        return self._cut_predicate(level, cut, cut_alias(level, cut))
+
+    def _fact_cut(
+        self, ref: ResolvedLevelRef, cut: Cut
+    ) -> Column | DataFrame | None:
+        """How ``cut`` restricts fact rows: ``None`` (no restriction), a
+        predicate over fact columns, or the matching dim keys as an
+        un-hinted frame with the single column ``_CUT_KEY``, to be matched
+        against the dimension's foreign key (primary_agg.rs:123-160)."""
+        if ref.degenerate:
+            if not cut.members:
+                return None
+            # cut column lives on the fact table — plain filter, pushed to scan
+            return self._cut_predicate(
+                ref.level, cut, ref.level.key_column, ref.level.name_column
+            )
+        pk = ref.hier.effective_primary_key()
+        fk = ref.dim.foreign_key
+        if fk is None:
+            raise QueryValidationError(
+                f"dimension {ref.dim.name!r} has a table but no foreign key"
+            )
+        if not cut.members:
+            # memberless default-hierarchy cut: unconditional dedup against
+            # the hierarchy table (primary_agg.rs:139-146)
+            return self._dim_df(ref.hier).select(F.col(pk).alias(_CUT_KEY))
+        if not cut.for_match and ref.level.key_column == pk:
+            # cut on the join key itself: skip the dim scan, filter the fact fk
+            # directly (generalizes the reference's fact-table cut inlining,
+            # primary_agg.rs:123-137)
+            return self._cut_predicate(ref.level, cut, fk)
+        # fk IN (SELECT pk FROM dim WHERE cut)
+        return (
+            self._dim_df(ref.hier)
+            .filter(
+                self._cut_predicate(
+                    ref.level, cut, ref.level.key_column, ref.level.name_column
+                )
+            )
+            .select(F.col(pk).alias(_CUT_KEY))
+        )
 
     def _implicit_cuts(self, cube: Cube, query: Query) -> list[Cut]:
         """Default-hierarchy and default-member auto-cuts (lib.rs:324-388,
@@ -399,83 +473,55 @@ class PlanBuilder:
             # sketch and the oracle both say IN), so the window branch must
             # drop NULL-key rows too, not pool them into one kept "group"
             .filter(F.col("__cc_any") & F.col(group_col).isNotNull())
-            .drop("__cc_any", "__cc_mk")
+            .drop("__cc_any", _CUT_KEY)
         )
 
     def _row_match_flag(
-        self, fact: DataFrame, mref, cut: Cut
+        self, fact: DataFrame, mref: ResolvedLevelRef, cut: Cut
     ) -> tuple[DataFrame, Column]:
         """Per-row boolean 'this row matches the member cut', computed without
-        re-reading the fact: degenerate / join-key cuts are plain predicates;
-        dim-table cuts left-join the (dim-sized, broadcast-hinted) matching
-        key set and test for a hit (column ``__cc_mk`` — caller drops it)."""
-        if not cut.members:
-            # memberless: every row with a dim match qualifies
-            if mref.degenerate:
-                return fact, F.lit(True)
-            pk = mref.hier.effective_primary_key()
-            fk = mref.dim.foreign_key
-            dim_keys = (
-                self._dim_df(mref.hier).select(F.col(pk).alias("__cc_mk")).distinct()
-            )
-            joined = fact.join(
-                self._dim_hint(mref.hier, dim_keys),
-                fact[fk] == F.col("__cc_mk"),
-                "left",
-            )
-            return joined, F.col("__cc_mk").isNotNull()
-        if mref.degenerate:
-            return fact, self._cut_predicate(mref.level, cut, mref.level.key_column)
-        pk = mref.hier.effective_primary_key()
-        fk = mref.dim.foreign_key
-        if fk is None:
-            raise QueryValidationError(
-                f"dimension {mref.dim.name!r} has a table but no foreign key"
-            )
-        if not cut.for_match and mref.level.key_column == pk:
-            return fact, self._cut_predicate(mref.level, cut, fk)
-        dim_keys = (
-            self._dim_df(mref.hier)
-            .filter(self._cut_predicate(mref.level, cut, mref.level.key_column))
-            .select(F.col(pk).alias("__cc_mk"))
-            .distinct()
-        )
+        re-reading the fact: a fact-column cut is its predicate; a dim-key
+        cut left-joins the (dim-sized, broadcast-hinted) distinct key set and
+        tests for a hit (column ``_CUT_KEY`` — caller drops it)."""
+        restrict = self._fact_cut(mref, cut)
+        if restrict is None:
+            return fact, F.lit(True)
+        if isinstance(restrict, Column):
+            return fact, restrict
         joined = fact.join(
-            self._dim_hint(mref.hier, dim_keys),
-            fact[fk] == F.col("__cc_mk"),
+            self._dim_hint(mref.hier, restrict.distinct()),
+            fact[mref.dim.foreign_key] == F.col(_CUT_KEY),
             "left",
         )
-        return joined, F.col("__cc_mk").isNotNull()
+        return joined, F.col(_CUT_KEY).isNotNull()
 
     def _apply_cut_group(
         self, cube: Cube, cuts: tuple[Cut, ...], fact: DataFrame
     ) -> DataFrame:
         """Disjunctive cut group: a fact row passes if ANY member cut
         matches (single-plan L5 — SURVEY §2.10). When a cut's level is
-        DRILLED its key alias column is already on every row (the
-        single-plan path applies groups above the joined template), so the
-        disjunction is ONE plain filter — no extra joins, and an
-        all-degenerate group pushes to the parquet scan. A cut whose alias
-        is absent (cuts-first path: two-phase aggregators, conditional
-        cuts) falls back to the conditional-cut flag machinery — a
-        broadcast left join per cut, the same per-cut cost as the
-        conjunctive semi-join."""
+        DRILLED its alias column is already on every row (the single-plan
+        path applies groups above the joined template), so the disjunction
+        is ONE plain filter — no extra joins, and an all-degenerate group
+        pushes to the parquet scan. A cut whose alias is absent (cuts-first
+        path: two-phase aggregators, conditional cuts) falls back to the
+        row match flag — a broadcast left join per dim-key cut, the same
+        per-cut cost as the conjunctive semi-join."""
         from functools import reduce as _reduce
 
         flag_cols: list[str] = []
         pure: list[Column] = []
         for i, cut in enumerate(cuts):
             ref = self.resolve_level(cube, cut.level_name)
-            alias = level_key_alias(ref.level)
-            if alias in fact.columns and cut.members:
-                pure.append(self._cut_predicate(ref.level, cut, alias))
+            if cut.members and cut_alias(ref.level, cut) in fact.columns:
+                pure.append(self.alias_cut(cube, cut))
                 continue
             fact, flag = self._row_match_flag(fact, ref, cut)
-            if "__cc_mk" in fact.columns:
+            if _CUT_KEY in fact.columns:
                 # joined flag: materialize under a per-cut name so the next
-                # cut's join can reuse the shared __cc_mk scratch column
+                # cut's join can reuse the shared _CUT_KEY scratch column
                 name = f"__cg_{i}"
-                fact = fact.withColumn(name, flag).drop("__cc_mk")
+                fact = fact.withColumn(name, flag).drop(_CUT_KEY)
                 flag_cols.append(name)
             else:
                 pure.append(flag)
@@ -487,41 +533,15 @@ class PlanBuilder:
 
     def _apply_one_cut(self, cube: Cube, cut: Cut, fact: DataFrame) -> DataFrame:
         ref = self.resolve_level(cube, cut.level_name)
-        if not cut.members:
-            # memberless default-hierarchy cut: unconditional semi-join dedup
-            # against the hierarchy table (primary_agg.rs:139-146)
-            if ref.degenerate:
-                return fact
-            pk = ref.hier.effective_primary_key()
-            fk = ref.dim.foreign_key
-            dim_keys = self._dim_df(ref.hier).select(F.col(pk).alias("__cut_key"))
-            return fact.join(
-                self._dim_hint(ref.hier, dim_keys),
-                fact[fk] == F.col("__cut_key"),
-                "left_semi",
-            )
-        if ref.degenerate:
-            # cut column lives on the fact table — plain filter, pushed to scan
-            return fact.filter(self._cut_predicate(ref.level, cut, ref.level.key_column))
-        pk = ref.hier.effective_primary_key()
-        fk = ref.dim.foreign_key
-        if fk is None:
-            raise QueryValidationError(
-                f"dimension {ref.dim.name!r} has a table but no foreign key"
-            )
-        if not cut.for_match and ref.level.key_column == pk:
-            # cut on the join key itself: skip the dim scan, filter the fact fk
-            # directly (generalizes the reference's fact-table cut inlining,
-            # primary_agg.rs:123-137)
-            return fact.filter(self._cut_predicate(ref.level, cut, fk))
-        # semi-join pushdown (primary_agg.rs:139-160): fk IN (SELECT pk FROM dim WHERE cut)
-        dim_df = self._dim_df(ref.hier)
-        dim_keys = dim_df.filter(
-            self._cut_predicate(ref.level, cut, ref.level.key_column)
-        ).select(F.col(pk).alias("__cut_key"))
+        restrict = self._fact_cut(ref, cut)
+        if restrict is None:
+            return fact
+        if isinstance(restrict, Column):
+            return fact.filter(restrict)
+        # semi-join pushdown (primary_agg.rs:139-160)
         return fact.join(
-            self._dim_hint(ref.hier, dim_keys),
-            fact[fk] == F.col("__cut_key"),
+            self._dim_hint(ref.hier, restrict),
+            fact[ref.dim.foreign_key] == F.col(_CUT_KEY),
             "left_semi",
         )
 
@@ -925,15 +945,6 @@ class PlanBuilder:
         return q
 
     # ---------------- post-agg options ----------------
-
-    _CMP = {
-        Comparison.EQ: "==",
-        Comparison.NEQ: "!=",
-        Comparison.LT: "<",
-        Comparison.LTE: "<=",
-        Comparison.GT: ">",
-        Comparison.GTE: ">=",
-    }
 
     def _constraint_pred(self, target: Column, fq: FilterQuery) -> Column:
         def one(c):

@@ -357,13 +357,7 @@ def apply_rca(
     # d1 cuts apply to a/c only — filter AFTER b/d are fixed (rca.rs:86-123)
     _, d1_cuts, _ = _split_rca_cuts(builder, cube, query)
     for cut in d1_cuts:
-        ref = builder.resolve_level(cube, cut.level_name)
-        from .builder import level_key_alias, level_name_alias
-
-        target = level_key_alias(ref.level)
-        if cut.for_match and ref.level.name_column:
-            target = level_name_alias(ref.level)
-        df = df.filter(builder._cut_predicate(ref.level, cut, target))
+        df = df.filter(builder.alias_cut(cube, cut))
 
     c_tab = _totals(df, ext_aliases + d1_aliases, "c")
     # no forced broadcast hints on b/c/d: their sizes are data-dependent
@@ -392,13 +386,10 @@ def apply_rate(
 ) -> DataFrame:
     """Expects ``df`` aggregated at (orig drills + rate level) grain — the builder
     adds the rate level as a hidden drill."""
-    from .builder import level_key_alias, level_name_alias
-
     rate = query.rate
     measure = cube.measure(query.measures[0])
     agg_fn = F.count if isinstance(measure.aggregator, Count) else F.sum
 
-    rate_ref = builder.resolve_level(cube, rate.level_name)
     rate_aliases = _spec_aliases(builder, specs, rate.level_name)
     all_aliases = builder._group_aliases(specs)
     orig_aliases = [a for a in all_aliases if a not in rate_aliases]
@@ -406,8 +397,7 @@ def apply_rate(
     w = Window.partitionBy(*[F.col(a) for a in orig_aliases])
     mea = F.col(measure.name)
     df = df.withColumn("__total", agg_fn(mea).over(w))
-    lits = builder._member_literals(rate_ref.level, rate.values)
-    df = df.filter(F.col(level_key_alias(rate_ref.level)).isin(lits))
+    df = df.filter(builder.alias_cut(cube, Cut(rate.level_name, rate.values)))
     out = (
         df.groupBy(*[F.col(a) for a in orig_aliases])
         .agg(

@@ -447,16 +447,9 @@ def _as_list(v) -> list[str]:
     if v is None or v == "":
         return []
     if isinstance(v, str):
-        return [s for s in v.split(",")] if False else _split_top_level(v)
+        # cut member lists also use commas: pass repeated params as a list
+        return v.split(",")
     return list(v)
-
-
-def _split_top_level(v: str) -> list[str]:
-    """Split a comma-joined param, but cut member lists also use commas — the
-    aggregate endpoint passes repeated params as lists; a single string is split
-    on commas only when safe (no dots after commas ambiguity is resolvable).
-    For cuts, pass a real list."""
-    return v.split(",")
 
 
 def _as_bool(v) -> bool:

@@ -231,16 +231,12 @@ def compact_partitions(
     if bucketed is None:
         return
     out, total = bucketed
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            out.repartition(int(total), *partition_cols, F.col("__b"))
-            .drop("__b")
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", int(target_rows))
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        out.repartition(int(total), *partition_cols, F.col("__b"))
+        .drop("__b")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("maxRecordsPerFile", int(target_rows))
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )

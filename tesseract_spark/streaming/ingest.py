@@ -174,18 +174,13 @@ def incremental_rollup(
     )
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.repartition("window_date")
-                .write.mode("overwrite")
-                .partitionBy("window_date")
-                .parquet(rollup_dir)
-            )
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            batch_df.repartition("window_date")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("window_date")
+            .parquet(rollup_dir)
+        )
 
     q = (
         agg.writeStream.foreachBatch(upsert)
@@ -382,14 +377,11 @@ def heavy_hitters_refresh_stream(
             .join(F.broadcast(touched), cond, "leftsemi")
         )
         roll = heavy_hitters_rollup(full, fine_cols, member_col, capacity)
-        prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            roll.repartition(*[F.col(c) for c in fine_cols]).write.mode(
-                "overwrite"
-            ).partitionBy(*fine_cols).parquet(summary_path)
-        finally:
-            sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        roll.repartition(*[F.col(c) for c in fine_cols]).write.mode(
+            "overwrite"
+        ).option("partitionOverwriteMode", "dynamic").partitionBy(
+            *fine_cols
+        ).parquet(summary_path)
 
     q = (
         spark.readStream.schema(schema)

@@ -411,7 +411,7 @@ def test_streaming_grain_refresh_matches_full_fact(builder, spark, tmp_path):
     assert nav.serve("lineitem_sales", q).collect() == want
 
 
-from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import HealthCheck, example, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
 _SERVE_DRILLS = [
@@ -455,6 +455,14 @@ def _subgrain_query(draw):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(params=_subgrain_query())
+# a LIKE cut on a named level tests the rollup's stored name column
+@example(
+    params={
+        "drilldowns": ["Customer Geography.Geography.Nation"],
+        "measures": ["Quantity"],
+        "cuts": ["*Customer Geography.Geography.Nation._1"],
+    }
+)
 def test_property_served_equals_fact_path(nav, builder, params):
     """Any sub-grain drill/measure/cut combination the grain covers must be
     served bit-identically to the fact-table plan."""

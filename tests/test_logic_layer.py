@@ -377,3 +377,30 @@ def test_data_growth_offset_calendar_passthrough(layer):
         expect = qty[y] - qty[y - 2] if (y - 2) in qty else None
         got = rows[y]
         assert (got is None and expect is None) or got == expect, (y, got, expect)
+
+
+def test_data_options_parse_like_aggregate(layer, builder):
+    """/data parses its aggregate options with Query.from_params, so a
+    property and a top_where give what the aggregate endpoint gives."""
+    from tesseract_spark.query.model import Query
+
+    def both(logic_params: dict, agg_params: dict):
+        got = layer.data({"cube": "sales", "measures": "Quantity", **logic_params})
+        want = builder.dataframe(
+            "lineitem_sales", Query.from_params({"measures": "Quantity", **agg_params})
+        )
+        return got, want
+
+    got, want = both(
+        {"drilldowns": "Part", "properties": "Part.Part.Part.Type"},
+        {"drilldowns": "Part.Part.Part", "properties": "Part.Part.Part.Type"},
+    )
+    assert "Type" in got.columns
+    assert got.collect() == want.collect()
+
+    got, want = both(
+        {"drilldowns": "Brand", "top_where": "Quantity,gt.1000000"},
+        {"drilldowns": "Part.Brand", "top_where": "Quantity,gt.1000000"},
+    )
+    assert got.count() == 0
+    assert got.collect() == want.collect()

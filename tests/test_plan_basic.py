@@ -180,6 +180,32 @@ def test_exclude_cut(builder, duck):
     )
 
 
+def test_rca_like_cut_on_d1_level(spark, builder, sf_dir):
+    """RCA applies d1 cuts to the drilled (ext, d1, d2) grain, so a LIKE cut
+    on the d1 level must test its name column there: the result equals the
+    same RCA with a member cut on the regions whose names contain "A"."""
+    from pyspark.sql import functions as F
+
+    rca = "Customer Geography.Geography.Region,Return Flag.Return Flag,Quantity"
+    keys = sorted(
+        r.r_regionkey
+        for r in spark.read.parquet(f"{sf_dir}/region.parquet")
+        .filter(F.col("r_name").contains("A"))
+        .collect()
+    )
+    assert 0 < len(keys) < 5, keys
+
+    def run(cut: str):
+        q = Query.from_params({"rca": rca, "cuts": [cut]})
+        return builder.dataframe("lineitem_sales", q).collect()
+
+    like = run("*Customer Geography.Geography.Region.A")
+    assert like, "LIKE cut must match members — vacuous evidence otherwise"
+    assert like == run(
+        "Customer Geography.Geography.Region." + ",".join(map(str, keys))
+    )
+
+
 def test_measure_filter_and_sort_limit(builder, duck):
     q = Query.from_params(
         {
