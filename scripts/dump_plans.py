@@ -11,12 +11,36 @@ default to the headline list in bench.py.
 Notes: entries whose value is produced by driver-side orchestration around
 writes (aggnav build/refresh, index builds) still dump the SERVED/returned
 frame's plan — the part a repeated dashboard query pays.
+
+Plans are written in canonical form (:func:`canonical`): expression ids and
+``plan_id=`` values are renumbered in order of first appearance, and the pid
+in per-process temp index dirs becomes ``<pid>``. Two dumps of the same plan,
+from two checkouts or two runs, then compare with a plain ``diff -r``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+
+
+def _renumber(prefix: str, text: str) -> str:
+    """Replace the number after each ``prefix`` by its rank of first
+    appearance — keeps which attributes are the same, drops the counter."""
+    ids: dict[str, int] = {}
+
+    def sub(m: re.Match) -> str:
+        return f"{prefix}{ids.setdefault(m.group(1), len(ids) + 1)}"
+
+    return re.sub(re.escape(prefix) + r"(\d+)", sub, text)
+
+
+def canonical(plan: str, pid: int) -> str:
+    """``plan`` with its run-dependent numbers made canonical."""
+    plan = _renumber("#", plan)
+    plan = _renumber("plan_id=", plan)
+    return re.sub(rf"(tesseract_spark_ivf_\S*?_){pid}\b", r"\1<pid>", plan)
 
 
 def main() -> int:
@@ -47,6 +71,7 @@ def main() -> int:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
+            plan = canonical(plan, os.getpid())
         except Exception as e:  # noqa: BLE001 — dump the rest regardless
             failures.append(name)
             plan = f"ERROR: {type(e).__name__}: {e}"

@@ -14,7 +14,10 @@ Spark-first design:
 - **Materialize = pass-1 partials, not final values.** The rollup stores the
   engine's existing two-phase pass-1 columns (``aggregators.pass1_cols``):
   decimal sums for exact-mode measures, (num, cnt) pairs for averages,
-  sum-of-squares for MOE. Serving re-aggregates with ``pass2_col`` — the
+  sum-of-squares for MOE. ``plans/aggregators.py`` owns that partial layout,
+  which measures may roll up (``decomposable``) and how increments merge
+  into stored partials (``merge_cols``); this module only routes, reads and
+  writes. Serving re-aggregates with ``pass2_col`` — the
   same composition already proven bit-equal to single-pass results by the
   two-phase entries — so a served result is BIT-IDENTICAL to running the
   query against the fact table, decimal associativity doing the work.
@@ -54,54 +57,13 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..query.model import LevelName, Query
-from ..schema.aggregator import (
-    ApproxDistinctCount,
-    Average,
-    BinnedQuantile,
-    Count,
-    Max,
-    Min,
-    Moe,
-    ReplicateWeightMoe,
-    Sum,
-    WeightedAverage,
-    WeightedAverageMoe,
-    WeightedSum,
-)
+from ..schema.aggregator import ApproxDistinctCount
 from . import aggregators as agg_mod
 from .builder import cut_alias, level_key_alias
-
-
-def _decomposable(measure, avg_grain: str) -> bool:
-    """True when pass-1 partials for this aggregator re-aggregate correctly
-    at ANY coarser grain. Grouped median (median-of-medians ≠ median),
-    distinct counts (not mergeable without sketch state), custom templates
-    (arbitrary SQL), and fk-grain averages (the reference's
-    average-of-averages is grain-dependent, aggregator.rs:163) are not."""
-    agg = measure.aggregator
-    if isinstance(agg, Average):
-        return avg_grain != "fk"
-    return isinstance(
-        agg,
-        (
-            Sum,
-            Count,
-            Max,
-            Min,
-            WeightedSum,
-            WeightedAverage,
-            Moe,
-            ReplicateWeightMoe,
-            WeightedAverageMoe,
-            # fixed-size array partials (per-bin count/min/max) merge
-            # exactly at any coarser grain — see _merge_cols
-            BinnedQuantile,
-        ),
-    )
 
 
 @dataclass
@@ -131,7 +93,7 @@ class MaterializedGrain:
 
 def _safe_names(columns: list[str]) -> list[str]:
     # parquet rejects " ,;{}()\n\t=" in field names; engine aliases carry
-    # spaces ("Extended Price__num"). Positional tokens round-trip anything.
+    # spaces ("Extended Price"). Positional tokens round-trip anything.
     return [f"c{i}" for i in range(len(columns))]
 
 
@@ -140,55 +102,6 @@ def _implicit_sig(builder, cube, query: Query) -> str:
     return ";".join(
         sorted(f"{c.level_name}|{','.join(map(str, c.members))}" for c in cuts)
     )
-
-
-def _merge_cols(measure, avg_grain: str) -> list[Column]:
-    """Partial-PRESERVING merge of pass-1 columns — ``pass2_col`` without the
-    final fold, so merged rollup rows keep the exact pass-1 schema (decimal
-    sums stay decimal, (num,cnt) pairs stay pairs) and remain serveable.
-    Every pass-1 partial is a sum except min/max, which merge as min/max;
-    deletes are NOT expressible (min/max can't retract) — refresh is
-    append-only by contract."""
-    agg = measure.aggregator
-    n = measure.name
-    if isinstance(agg, Max):
-        return [F.max(n).alias(n)]
-    if isinstance(agg, Min):
-        return [F.min(n).alias(n)]
-    if isinstance(agg, Average) and avg_grain != "fk":
-        names = [f"{n}__num", f"{n}__cnt"]
-    elif isinstance(agg, WeightedAverage):
-        names = [f"{n}__num", f"{n}__den"]
-    elif isinstance(agg, Moe):
-        names = [f"{n}__sub"]
-    elif isinstance(agg, ReplicateWeightMoe):
-        names = [f"{n}__p"] + [
-            f"{n}__s{i}" for i in range(len(agg.secondary_columns))
-        ]
-    elif isinstance(agg, WeightedAverageMoe):
-        names = [f"{n}__pnum", f"{n}__pden"]
-        for i in range(len(agg.secondary_weight_columns)):
-            names += [f"{n}__snum{i}", f"{n}__sden{i}"]
-    elif isinstance(agg, BinnedQuantile):
-        # elementwise array merge: counts add, bounds widen — rebuilt as
-        # arrays so merged rollup rows keep the exact pass-1 schema
-        nb = len(agg.boundaries) + 1
-        return [
-            F.array(
-                *[F.sum(F.element_at(F.col(f"{n}__bc"), j + 1)) for j in range(nb)]
-            ).alias(f"{n}__bc"),
-            F.array(
-                *[F.min(F.element_at(F.col(f"{n}__bmin"), j + 1)) for j in range(nb)]
-            ).alias(f"{n}__bmin"),
-            F.array(
-                *[F.max(F.element_at(F.col(f"{n}__bmax"), j + 1)) for j in range(nb)]
-            ).alias(f"{n}__bmax"),
-        ]
-    elif isinstance(agg, (Sum, Count, WeightedSum)):
-        names = [n]
-    else:  # same gate as _decomposable — unreachable via materialize()
-        raise ValueError(f"non-mergeable aggregator {agg!r}")
-    return [F.sum(c).alias(c) for c in names]
 
 
 class AggregateNavigator:
@@ -324,7 +237,7 @@ class AggregateNavigator:
         b._validate(cube, q)
         specs = b._drill_specs(cube, q)
         mea_objs = [cube.measure(m) for m in q.measures]
-        bad = [m.name for m in mea_objs if not _decomposable(m, b.avg_grain)]
+        bad = [m.name for m in mea_objs if not agg_mod.decomposable(m, b.avg_grain)]
         if bad:
             raise ValueError(
                 f"measures not decomposable for aggregate navigation: {bad}"
@@ -349,7 +262,7 @@ class AggregateNavigator:
         :meth:`materialize` for those. Returns the affected partition values.
 
         Exactness: merged partials keep the pass-1 schema via
-        :func:`_merge_cols` (decimal sums stay decimal), so a refreshed
+        :func:`aggregators.merge_cols` (decimal sums stay decimal), so a refreshed
         rollup serves bit-identically to one materialized from the full
         fact — pinned by ``tests/test_aggnav.py``."""
         b = self.builder
@@ -381,7 +294,7 @@ class AggregateNavigator:
         merged = (
             existing.unionByName(new_partials)
             .groupBy(*[F.col(c) for c in group_cols])
-            .agg(*[c for m in mea_objs for c in _merge_cols(m, b.avg_grain)])
+            .agg(*[c for m in mea_objs for c in agg_mod.merge_cols(m, b.avg_grain)])
             .select(*[F.col(c) for c in grain.columns])
         )
         # break lineage before overwriting the path being read (bounded:
@@ -544,7 +457,7 @@ class AggregateNavigator:
         # ApproxDistinctCount rides the sketch tier (coverage checked per
         # grain below); every other non-decomposable aggregator falls back
         if any(
-            not _decomposable(m, b.avg_grain)
+            not agg_mod.decomposable(m, b.avg_grain)
             and not isinstance(m.aggregator, ApproxDistinctCount)
             for m in mea_objs
         ):
@@ -606,13 +519,11 @@ class AggregateNavigator:
 
         group_cols = b._group_aliases(specs)
         p2 = [agg_mod.pass2_col(m, b.avg_grain) for m in exact_objs]
-        if not p2:
-            # all-sketch query: the base frame is the grain's group rows
-            df = df.select(*[F.col(c) for c in group_cols]).distinct()
-        elif group_cols:
+        if p2:
             df = df.groupBy(*[F.col(c) for c in group_cols]).agg(*p2)
         else:
-            df = df.agg(*p2)
+            # all-sketch query: the base frame is the grain's group rows
+            df = df.select(*[F.col(c) for c in group_cols]).distinct()
 
         for m in sketch_objs:
             est = self._serve_sketch(g, m, group_cols, cut_filter)

@@ -630,9 +630,7 @@ class PlanBuilder:
             agg_query = copy.copy(query)
             agg_query.cuts = ext_cuts
 
-        two_phase = any(
-            agg_mod.needs_two_phase(m.aggregator, self.avg_grain) for m in measures
-        )
+        two_phase = any(agg_mod.needs_two_phase(m, self.avg_grain) for m in measures)
 
         if two_phase:
             # cuts must precede the fact-grain pre-aggregation (raw cut
@@ -665,10 +663,7 @@ class PlanBuilder:
                 joined = self._apply_cuts(cube, agg_query, joined)
             group_cols = self._group_aliases(specs)
             aggs = [agg_mod.single_pass_agg(m) for m in measures]
-            if group_cols:
-                df = joined.groupBy(*[F.col(c) for c in group_cols]).agg(*aggs)
-            else:
-                df = joined.agg(*aggs)
+            df = joined.groupBy(*[F.col(c) for c in group_cols]).agg(*aggs)
 
         # calculations wrap the primary aggregation (sql.rs:35-61 dispatch)
         out_specs = specs
@@ -885,9 +880,7 @@ class PlanBuilder:
         joined = self._join_dims(specs, pre)
         group_cols = self._group_aliases(specs)
         p2 = [agg_mod.pass2_col(m, self.avg_grain) for m in measures]
-        if group_cols:
-            return joined.groupBy(*[F.col(c) for c in group_cols]).agg(*p2)
-        return joined.agg(*p2)
+        return joined.groupBy(*[F.col(c) for c in group_cols]).agg(*p2)
 
     def _group_aliases(self, specs: list[DrillSpec]) -> list[str]:
         out: list[str] = []

@@ -161,13 +161,13 @@ def apply_growth(
             *[c.asc() for c in time_cols]
         )
         prev = F.lag(mea, n).over(w)
-    elif n > 1:
-        # Global lag N (time-only drill, growth_offset > 1 — the same-
-        # period-last-year extension): the lag-1 carry below patches each
-        # range partition's FIRST row with the previous partition's LAST
-        # value; at offset N the first N rows each need a different one of
-        # the previous partitions' trailing N values. Same distributed
-        # shape, array-valued carry: per-partition trailing-N (time, mea)
+    else:
+        # Global lag N (time is the only drill): a plain window would funnel
+        # every row through ONE task. Distributed form instead: range-
+        # partition by time (earlier periods land in earlier partitions) and
+        # lag WITHIN each partition in parallel; the first N rows of each
+        # partition then need the previous partitions' trailing N values,
+        # carried as an array: per-partition trailing-N (time, mea)
         # structs (bounded: #partitions × N rows), each partition's carry =
         # last N of the time-sorted flatten of ALL earlier partitions'
         # tails (the pid<pid' join sidesteps empty range partitions), and
@@ -233,34 +233,6 @@ def apply_growth(
                 F.col("__carry_arr"), F.col("__rn") - F.lit(n + 1)
             ).getField("__m")
         )
-    else:
-        # Global lag (time is the only drill): a plain window would funnel
-        # every row through ONE task. Distributed form instead: range-partition
-        # by time (earlier periods land in earlier partitions), lag WITHIN each
-        # partition in parallel, then patch each partition's first row with the
-        # previous partition's last value via a tiny per-partition carry table
-        # (#partitions rows; the pid<pid' self-join sidesteps empty range
-        # partitions that a pid+1 equi-join would trip over).
-        df = df.repartitionByRange(*time_cols).withColumn(
-            "__pid", F.spark_partition_id()
-        )
-        w_in = Window.partitionBy("__pid").orderBy(*[c.asc() for c in time_cols])
-        df = df.withColumn("__prev_in", F.lag(mea).over(w_in))
-        # the lagged grain feeds the lasts aggregate (twice, via its
-        # cur/lo self-join) and the final carry join — materialize once
-        # (guide §2.4; r16): bounded by the post-agg group count
-        df = df.localCheckpoint(eager=False)
-        lasts = df.groupBy("__pid").agg(
-            F.max_by(mea, F.struct(*time_cols)).alias("__last")
-        )
-        carry = (
-            lasts.alias("cur")
-            .join(F.broadcast(lasts.alias("lo")), F.col("lo.__pid") < F.col("cur.__pid"))
-            .groupBy(F.col("cur.__pid").alias("__pid"))
-            .agg(F.max_by(F.col("lo.__last"), F.col("lo.__pid")).alias("__carry"))
-        )
-        df = df.join(F.broadcast(carry), "__pid", "left")
-        prev = F.coalesce(F.col("__prev_in"), F.col("__carry"))
 
     growth_value = mea - prev
     # growth.rs:104 — `(m−Δ)>0 ? Δ/(m−Δ) : Δ/0`. Default (growth_div0=inf)
@@ -282,7 +254,7 @@ def apply_growth(
     if growth.calendar:
         out = out.drop("__prev_cal")
     elif not part_aliases:
-        out = out.drop("__pid", "__prev_in", "__carry", "__rn", "__carry_arr")
+        out = out.drop("__pid", "__prev_in", "__rn", "__carry_arr")
     return out
 
 
@@ -349,10 +321,7 @@ def apply_rca(
         return src.groupBy(*[F.col(k) for k in keys]).agg(F.sum("a").alias(alias))
 
     b_tab = _totals(df, ext_aliases + d2_aliases, "b")
-    if ext_aliases:
-        d_tab = _totals(df, ext_aliases, "d")
-    else:
-        d_tab = df.agg(F.sum("a").alias("d"))  # grand total: 1-row scalar
+    d_tab = _totals(df, ext_aliases, "d")  # no ext: grand total, 1-row scalar
 
     # d1 cuts apply to a/c only — filter AFTER b/d are fixed (rca.rs:86-123)
     _, d1_cuts, _ = _split_rca_cuts(builder, cube, query)

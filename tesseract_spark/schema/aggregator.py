@@ -23,16 +23,6 @@ class Aggregator:
     #: variant name as it appears in schema JSON
     kind: str = ""
 
-    def is_decomposable(self) -> bool:
-        """True when a single-pass Spark aggregate equals the reference's
-        two-phase (fk-grain partial → level-grain final) result.
-
-        ``avg`` and ``basic_grouped_median`` are NOT decomposable: the reference
-        computes avg-of-averages / median-of-group-subtotals (see SURVEY.md §2.4
-        note; tesseract-clickhouse/src/sql/aggregator.rs:34,163).
-        """
-        return True
-
 
 @dataclass(frozen=True)
 class Sum(Aggregator):
@@ -73,9 +63,6 @@ class BasicGroupedMedian(Aggregator):
     kind = "basic_grouped_median"
     group_aggregator: str = "sum"
     group_dimension: str = ""
-
-    def is_decomposable(self) -> bool:
-        return False
 
 
 @dataclass(frozen=True)
@@ -131,9 +118,6 @@ class DistinctCount(Aggregator):
     aggregator). Non-decomposable: unavailable in the two-phase plan path."""
 
     kind = "distinct_count"
-
-    def is_decomposable(self) -> bool:
-        return False
 
 
 @dataclass(frozen=True)

@@ -330,6 +330,50 @@ def test_refresh_merges_increment_bit_exactly(builder, spark, tmp_path):
         ), drills
 
 
+def test_refresh_merges_weighted_and_moe_partials(builder, tmp_path):
+    """The weighted-sum, weighted-average, plain MOE and both replicate MOE
+    partials (and flat averages) survive a refresh merge: served values
+    match the fact path, by every drill of the grain. These measures sum
+    plain doubles, so they agree to rounding, not bit for bit."""
+    from pyspark.sql import functions as F
+
+    measures = [
+        "Weighted Price Sum",
+        "Discount RW MOE",
+        "Price WAvg MOE",
+        "Tax MOE",
+        "Weighted Price",
+        "Avg Discount",
+    ]
+    fact = builder.registry.load("lineitem_enriched")
+    nav = AggregateNavigator(builder)
+    builder.registry.register(
+        "lineitem_enriched", fact.filter(F.year("l_shipdate") < 1997), broadcastable=False
+    )
+    try:
+        g = nav.materialize(
+            "lineitem_sales",
+            ["Ship Date.Ship Date.Year", "Part.Brand"],
+            measures,
+            str(tmp_path / "grain_moe"),
+            partition_by="Ship Date.Ship Date.Year",
+        )
+    finally:
+        builder.registry.register("lineitem_enriched", fact, broadcastable=False)
+    assert set(nav.refresh(g, fact.filter(F.year("l_shipdate") >= 1997))) >= {1997}
+
+    for drill, key in (("Ship Date.Ship Date.Year", "Year"), ("Part.Brand", "Brand")):
+        q = _q(drilldowns=[drill], measures=measures)
+        served = nav.serve("lineitem_sales", q)
+        assert served is not None, drill
+        got = {r[key]: r for r in served.collect()}
+        want = {r[key]: r for r in builder.dataframe("lineitem_sales", q).collect()}
+        assert got.keys() == want.keys(), drill
+        for k, row in want.items():
+            for m in measures:
+                assert got[k][m] == pytest.approx(row[m], rel=1e-9), (drill, k, m)
+
+
 def test_refresh_empty_increment_noop(builder, spark, tmp_path):
     from pyspark.sql import functions as F
 

@@ -519,6 +519,69 @@ def test_growth_div0_inf_mode(spark):
     assert math.isnan(out[2001])
 
 
+def test_global_growth_lag_one_keeps_null_predecessor(spark):
+    """Time-only growth at offset 1 over a range-partitioned series: a
+    period whose predecessor is NULL has NULL growth — the NULL must not be
+    replaced by an earlier partition's last value. Every row is compared
+    with a plain Python row-lag."""
+    from tesseract_spark.plans.builder import PlanBuilder
+    from tesseract_spark.schema.parse import schema_from_json
+    from tesseract_spark.sources.registry import TableRegistry
+
+    schema = schema_from_json(
+        {
+            "name": "t",
+            "cubes": [
+                {
+                    "name": "c",
+                    "table": {"name": "fact"},
+                    "dimensions": [
+                        {
+                            "name": "Time",
+                            "type": "time",
+                            "hierarchies": [
+                                {
+                                    "name": "Time",
+                                    "levels": [{"name": "Year", "key_column": "year"}],
+                                }
+                            ],
+                        }
+                    ],
+                    "measures": [{"name": "V", "column": "v", "aggregator": "sum"}],
+                }
+            ],
+        }
+    )
+    # NULL at y % 3 == 1, so a partition's last row is rarely NULL: a wrong
+    # carry from a NULL last row would itself be NULL and hide the fault
+    values = {y: None if y % 3 == 1 else 10.0 * y for y in range(1, 49)}
+    reg = TableRegistry(spark)
+    reg.register(
+        "fact", spark.createDataFrame(sorted(values.items()), "year int, v double")
+    )
+    q = Query.from_params(
+        {"drilldowns": ["Time.Year"], "measures": ["V"], "growth": "Time.Time.Year,V"}
+    )
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    # keep the range partitions apart, so most NULLs sit inside a partition
+    spark.conf.set(key, "false")
+    try:
+        rows = PlanBuilder(spark, schema, reg).dataframe("c", q).collect()
+    finally:
+        spark.conf.set(key, old)
+
+    got = {r["Year"]: (r["V Growth Value"], r["V Growth"]) for r in rows}
+    assert sorted(got) == sorted(values)
+    for y, cur in values.items():
+        prev = values.get(y - 1)
+        if cur is None or prev is None:
+            want = (None, None)
+        else:
+            want = (cur - prev, (cur - prev) / prev)
+        assert got[y] == want, y
+
+
 def test_plan_cache_identity_and_invalidation(spark, builder):
     """r11 plan cache (prepared-statement analog): the same query returns
     the SAME DataFrame object (no rebuilt driver-side analysis), a
