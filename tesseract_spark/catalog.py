@@ -1819,8 +1819,10 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _local_input_bytes(path: str) -> int:
-    """Total bytes of a local parquet file or directory (raises OSError for
-    remote/missing paths — callers fall back to the blind spread)."""
+    """Total bytes of a local parquet file or directory, partition
+    subdirectories included; ``_``/``.``-prefixed entries (markers,
+    checksums, metadata dirs) are skipped at every level. Raises OSError
+    for remote/missing paths — callers fall back to the blind spread."""
     import os as _os
 
     if _os.path.isfile(path):
@@ -1828,7 +1830,11 @@ def _local_input_bytes(path: str) -> int:
     total = 0
     with _os.scandir(path) as it:
         for e in it:
-            if e.is_file() and not e.name.startswith(("_", ".")):
+            if e.name.startswith(("_", ".")):
+                continue
+            if e.is_dir():
+                total += _local_input_bytes(e.path)
+            elif e.is_file():
                 total += e.stat().st_size
     return total
 

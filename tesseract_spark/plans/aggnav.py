@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 
 from ..query.model import LevelName, Query
 from ..schema.aggregator import ApproxDistinctCount
+from ..sources.rollup_sink import rewrite_partitions, write_rollup
 from . import aggregators as agg_mod
 from .builder import cut_alias, level_key_alias
 
@@ -89,6 +90,18 @@ class MaterializedGrain:
     # opt-in to that contract.
     sketch_measures: list[str] = field(default_factory=list)
     sketch_p: int = 0
+
+
+# the on-disk meta row: one column per MaterializedGrain field except path
+# (field types hold no commas, so the names split off the DDL directly)
+_META_DDL = (
+    "cube string, drilldowns array<string>, measures array<string>,"
+    " columns array<string>, dtypes array<string>,"
+    " partition_by array<string>, implicit_sig string,"
+    " parents boolean, n_rows long,"
+    " sketch_measures array<string>, sketch_p long"
+)
+_META_FIELDS = [f.split()[0] for f in _META_DDL.split(",")]
 
 
 def _safe_names(columns: list[str]) -> list[str]:
@@ -174,10 +187,9 @@ class AggregateNavigator:
         if missing:
             raise ValueError(f"partition column(s) not in grain output: {missing}")
 
+        safe_parts = [safe[c] for c in part_cols]
         out = pre.select(*[F.col(c).alias(safe[c]) for c in columns])
-        out.repartition(*[safe[c] for c in part_cols]).write.mode(mode).partitionBy(
-            *[safe[c] for c in part_cols]
-        ).parquet(f"{path}/partials")
+        write_rollup(out, f"{path}/partials", safe_parts, mode)
 
         from ..operators.sketch import hll_grouped_registers
 
@@ -191,11 +203,7 @@ class AggregateNavigator:
             regs_out = regs.select(
                 *[F.col(c).alias(safe[c]) for c in group_cols], "j", "r"
             )
-            regs_out.repartition(*[safe[c] for c in part_cols]).write.mode(
-                mode
-            ).partitionBy(*[safe[c] for c in part_cols]).parquet(
-                f"{path}/hll_{i}"
-            )
+            write_rollup(regs_out, f"{path}/hll_{i}", safe_parts, mode)
 
         grain = MaterializedGrain(
             cube=cube_name,
@@ -304,9 +312,7 @@ class AggregateNavigator:
         safe = dict(zip(grain.columns, _safe_names(grain.columns)))
         out = merged.select(*[F.col(c).alias(safe[c]) for c in grain.columns])
         spark = b.spark
-        out.repartition(safe[part_col]).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(safe[part_col]).parquet(f"{grain.path}/partials")
+        rewrite_partitions(out, f"{grain.path}/partials", [safe[part_col]])
         # sketch tier: merge increment registers into the affected
         # partitions by element-wise max — the merge is EXACT (registers of
         # a union are the max of the parts), so a refreshed sketch serves
@@ -321,7 +327,7 @@ class AggregateNavigator:
                     cube.measure(mname).column,
                     grain.sketch_p,
                 )
-                existing_regs = self._read_sketch_raw(spark, grain, i).filter(
+                existing_regs = self._read_partials(spark, grain, f"hll_{i}").filter(
                     F.col(part_col).isin(affected)
                 )
                 merged_regs = (
@@ -337,97 +343,55 @@ class AggregateNavigator:
                     "j",
                     "r",
                 )
-                out_regs.repartition(safe[part_col]).write.mode(
-                    "overwrite"
-                ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                    safe[part_col]
-                ).parquet(f"{grain.path}/hll_{i}")
+                rewrite_partitions(
+                    out_regs, f"{grain.path}/hll_{i}", [safe[part_col]]
+                )
 
         grain.n_rows = spark.read.parquet(f"{grain.path}/partials").count()
         self._write_meta(spark, grain, "overwrite")
         return affected
 
-    def _read_sketch_raw(
-        self, spark: SparkSession, g: MaterializedGrain, i: int
-    ) -> DataFrame:
-        """Register dataset with real group-column names/dtypes restored."""
-        raw = spark.read.parquet(f"{g.path}/hll_{i}")
-        sel = []
-        for real, tok, dt in zip(g.columns, _safe_names(g.columns), g.dtypes):
-            if tok in raw.columns:
-                c = F.col(tok)
-                if real in g.partition_by:
-                    c = c.cast(dt)
-                sel.append(c.alias(real))
-        return raw.select(*sel, "j", "r")
-
     @staticmethod
     def _write_meta(spark: SparkSession, g: MaterializedGrain, mode: str) -> None:
-        row = [
-            (
-                g.cube,
-                g.drilldowns,
-                g.measures,
-                g.columns,
-                g.dtypes,
-                g.partition_by,
-                g.implicit_sig,
-                g.parents,
-                g.n_rows,
-                g.sketch_measures,
-                g.sketch_p,
-            )
-        ]
         from ..session import local_df
 
-        local_df(
-            spark,
-            row,
-            "cube string, drilldowns array<string>, measures array<string>,"
-            " columns array<string>, dtypes array<string>,"
-            " partition_by array<string>, implicit_sig string,"
-            " parents boolean, n_rows long,"
-            " sketch_measures array<string>, sketch_p long",
-        ).coalesce(1).write.mode(mode).parquet(f"{g.path}/meta")
+        row = [tuple(getattr(g, name) for name in _META_FIELDS)]
+        local_df(spark, row, _META_DDL).coalesce(1).write.mode(mode).parquet(
+            f"{g.path}/meta"
+        )
 
     def load_grain(self, spark: SparkSession, path: str) -> MaterializedGrain:
-        """Re-register a rollup materialized by another process."""
-        r = spark.read.parquet(f"{path}/meta").collect()[0]
-        d = r.asDict()
-        grain = MaterializedGrain(
-            cube=r.cube,
-            drilldowns=list(r.drilldowns),
-            measures=list(r.measures),
-            path=path,
-            columns=list(r.columns),
-            dtypes=list(r.dtypes),
-            partition_by=list(r.partition_by),
-            implicit_sig=r.implicit_sig,
-            parents=r.parents,
-            n_rows=r.n_rows,
-            # metas written before the sketch tier lack these fields
-            sketch_measures=list(d.get("sketch_measures") or []),
-            sketch_p=int(d.get("sketch_p") or 0),
-        )
+        """Re-register a rollup materialized by another process. Metas
+        written before the sketch tier lack its fields and load with the
+        dataclass defaults."""
+        row = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
+        grain = MaterializedGrain(path=path, **row)
         self.grains.append(grain)
         return grain
 
     # ---------------- serve side ----------------
 
-    def _read_partials(self, spark: SparkSession, g: MaterializedGrain) -> DataFrame:
-        """Read the rollup with real column names/dtypes restored. Partition
-        columns come back via directory inference; the recorded dtype cast
-        normalizes them (keys are written via ``str()`` of the key value, so
-        the cast is lossless for the int/string keys levels carry)."""
-        df = spark.read.parquet(f"{g.path}/partials")
+    def _read_partials(
+        self, spark: SparkSession, g: MaterializedGrain, sub: str = "partials"
+    ) -> DataFrame:
+        """Read ``{path}/{sub}`` (the partials or a ``hll_<i>`` register
+        dataset) with the real names/dtypes of the grain columns it holds
+        restored; other columns (the registers' ``j``/``r``) pass through.
+        Partition columns come back via directory inference; the recorded
+        dtype cast normalizes them (keys are written via ``str()`` of the
+        key value, so the cast is lossless for the int/string keys levels
+        carry)."""
+        df = spark.read.parquet(f"{g.path}/{sub}")
         safe = _safe_names(g.columns)
+        present = df.columns
         sel = []
         for real, tok, dt in zip(g.columns, safe, g.dtypes):
-            c = F.col(tok)
-            if real in g.partition_by:
-                c = c.cast(dt)
-            sel.append(c.alias(real))
-        return df.select(*sel)
+            if tok in present:
+                c = F.col(tok)
+                if real in g.partition_by:
+                    c = c.cast(dt)
+                sel.append(c.alias(real))
+        return df.select(*sel, *[c for c in present if c not in safe])
 
     def match(self, cube_name: str, query: Query) -> MaterializedGrain | None:
         """First registered grain that can answer ``query`` exactly."""
@@ -552,7 +516,7 @@ class AggregateNavigator:
 
         b = self.builder
         i = list(g.sketch_measures).index(measure.name)
-        regs = cut_filter(self._read_sketch_raw(b.spark, g, i))
+        regs = cut_filter(self._read_partials(b.spark, g, f"hll_{i}"))
         merged = hll_merge_grouped(regs, group_cols)
         return hll_estimate_grouped(
             merged, group_cols, g.sketch_p, out_col=measure.name

@@ -39,6 +39,19 @@ def write_rollup(
     )
 
 
+def rewrite_partitions(df: DataFrame, path: str, partition_by: list[str]) -> None:
+    """:func:`write_rollup` with dynamic partition overwrite: only the
+    partition directories ``df`` holds are replaced; every other directory
+    under ``path`` keeps its files untouched."""
+    (
+        df.repartition(*partition_by)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
+
+
 def read_rollup(spark: SparkSession, path: str) -> DataFrame:
     """Read a materialized rollup; filters on partition columns prune
     directories (verify via ``PartitionFilters`` in the scan node)."""

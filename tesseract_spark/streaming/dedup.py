@@ -17,12 +17,9 @@ deduplicated stream must equal the batch distinct of one copy.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
-from .events import EVENTS_SCHEMA, _normalize_ts
+from .drive import _drain_to_memory, _events_stream, _staged_events
 
 
 def dedup_stream(events: DataFrame, key_cols: list[str], watermark: str = "2 hours") -> DataFrame:
@@ -38,21 +35,6 @@ def streaming_dedup_demo(
     """Run the dedup over a file stream that delivers every event TWICE
     (two staged copies of events.parquet), returning the deduplicated result
     from the in-memory sink."""
-    stage = tempfile.mkdtemp(prefix="events_dedup_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events_a.parquet")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events_b.parquet")
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _normalize_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(stage))
-    deduped = dedup_stream(stream, ["event_id"])
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    with _staged_events(sf_dir, copies=2) as stage:
+        deduped = dedup_stream(_events_stream(spark, stage), ["event_id"])
+        return _drain_to_memory(deduped, query_name, "append")

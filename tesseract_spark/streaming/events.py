@@ -7,9 +7,9 @@ handling over ``(event_id, ts, user_id, event_type, value, props)``.
 
 ``windowed_agg`` is written against a generic DataFrame so the SAME plan runs
 in batch mode (for the DuckDB oracle — window start = epoch-aligned bucket,
-identical to DuckDB's ``time_bucket``) and in streaming mode via
-``readStream``; ``run_streaming_demo`` drives it through a real streaming query
-using the in-memory sink.
+identical to DuckDB's ``time_bucket``) and in streaming mode over a file
+stream; ``run_streaming_demo`` drives it through a real streaming query using
+the in-memory sink (``drive``).
 """
 
 from __future__ import annotations
@@ -149,27 +149,8 @@ def run_streaming_demo(
     """Drive the SAME windowed plan as a real Structured Streaming query over
     the parquet source (file-stream), with a 2-hour watermark for late data;
     returns the completed result from the in-memory sink."""
-    # FileStreamSource requires a directory; stage a symlink dir over the
-    # read-only testdata file
-    import os
-    import tempfile
+    from .drive import _drain_to_memory, _events_stream, _staged_events
 
-    stage = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _normalize_ts(
-        spark.readStream.schema(EVENTS_SCHEMA).parquet(stage)
-    ).withWatermark("ts", "2 hours")
-    agg = windowed_agg(stream)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    with _staged_events(sf_dir) as stage:
+        stream = _events_stream(spark, stage).withWatermark("ts", "2 hours")
+        return _drain_to_memory(windowed_agg(stream), query_name, "complete")

@@ -16,29 +16,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import local_df
-
 from ..schema.model import Schema
 from ..schema.parse import schema_from_json
-from .events import EVENTS_SCHEMA, _normalize_ts
-
-
-def _read_applied_ledger(sess: SparkSession, ledger_dir: str) -> set:
-    """Applied-file set of an exactly-once ingest ledger. ONLY the
-    missing-table case (first batch: ledger not written yet) may return
-    empty — a transient read failure (FS hiccup, corrupt footer,
-    permissions) must raise, because treating it as 'first batch' would
-    re-apply every already-applied file in the batch: duplicate list rows
-    / double-counted sums with no error, the same silent-corruption mode
-    ``ann_index._read_ivfpq_meta`` refuses for meta reads."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        return {r.path for r in sess.read.parquet(ledger_dir).collect()}
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return set()
-        raise
+from ..sources.rollup_sink import rewrite_partitions
+from .drive import (
+    _events_stream,
+    _file_stream,
+    _fold_new_files,
+    _foreach_batch,
+    _read_applied_ledger,  # noqa: F401 — re-exported for existing importers
+    _run_available_now,
+)
 
 
 def _derive(events: DataFrame) -> DataFrame:
@@ -60,20 +48,13 @@ def ingest_events(
 ):
     """Start (and drain, for the local smoke path) a streaming ingest from a
     parquet events source into a parquet sink with derived time levels."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _normalize_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(source_dir))
-    q = (
-        _derive(stream)
+    return _run_available_now(
+        _derive(_events_stream(spark, source_dir))
         .writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", sink_dir),
+        checkpoint_dir,
+        query_name,
     )
-    q.processAllAvailable()
-    q.stop()
-    return q
 
 
 EVENTS_CUBE_JSON = {
@@ -164,35 +145,13 @@ def incremental_rollup(
     update-mode batch would drop that day's unchanged windows."""
     from .events import windowed_agg
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _normalize_ts(
-        spark.readStream.schema(EVENTS_SCHEMA).parquet(source_dir)
-    ).withWatermark("ts", "2 hours")
-
-    agg = windowed_agg(stream).withColumn(
-        "window_date", F.to_date("window_start")
-    )
+    stream = _events_stream(spark, source_dir).withWatermark("ts", "2 hours")
+    agg = windowed_agg(stream).withColumn("window_date", F.to_date("window_start"))
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.repartition("window_date")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("window_date")
-            .parquet(rollup_dir)
-        )
+        rewrite_partitions(batch_df, rollup_dir, ["window_date"])
 
-    q = (
-        agg.writeStream.foreachBatch(upsert)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return q
+    return _foreach_batch(agg, upsert, checkpoint_dir, query_name, "complete")
 
 
 def grain_refresh_stream(
@@ -211,54 +170,20 @@ def grain_refresh_stream(
 
     Exactly-once: ``refresh`` is a non-idempotent merge (replaying data
     would double-count sums), so applied arrival FILES are recorded in a
-    ledger at ``{grain.path}/refresh_ledger`` and already-applied files are
-    excluded from each batch — file-level bookkeeping survives checkpoint
-    regeneration and batch regrouping, where a batch-id ledger would skip
-    or double-apply. The ledger append and the partial rewrite are two
-    non-transactional writes: a crash landing exactly between them
-    re-applies one batch's files on restart — the standard limit of
-    file-sink streaming; the production answer is a transactional table
-    format (Delta/Iceberg MERGE), not available in this environment.
-    Ledger reads are bounded (one row per arrival file).
+    ledger at ``{grain.path}/refresh_ledger`` and excluded from every batch
+    (``drive._fold_new_files``).
 
-    Runs with ``availableNow`` and blocks until drained, mirroring
+    Drains what is available at start and returns, mirroring
     ``incremental_rollup``."""
-    spark = navigator.builder.spark
-    ledger_dir = f"{grain.path}/refresh_ledger"
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        applied = _read_applied_ledger(sess, ledger_dir)
-        # inputFiles() is empty on a micro-batch plan; derive the file set
-        # from input_file_name() (bounded collect: files per batch)
-        named = batch_df.withColumn("__src_file", F.input_file_name())
-        files = {
-            r[0] for r in named.select("__src_file").distinct().collect()
-        }
-        fresh = sorted(files - applied)
-        if not fresh:
-            return
-        inc = named
-        if files - set(fresh):  # partial replay: keep only unapplied files
-            inc = named.filter(F.col("__src_file").isin(fresh))
-        inc = inc.drop("__src_file")
-        navigator.refresh(grain, inc)
-        local_df(sess, [(f,) for f in fresh], "path string").write.mode(
-            "append"
-        ).parquet(ledger_dir)
-
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_new_files(
+        navigator.builder.spark,
+        source_dir,
+        schema,
+        f"{grain.path}/refresh_ledger",
+        checkpoint_dir,
+        query_name,
+        lambda inc: navigator.refresh(grain, inc),
     )
-    q.processAllAvailable()
-    q.stop()
-    return q
 
 
 def ivfpq_ingest_stream(
@@ -281,43 +206,21 @@ def ivfpq_ingest_stream(
     a file would duplicate its list rows and surface phantom neighbors):
     applied arrival files are recorded at ``{index_path}/ingest_ledger``
     and excluded from every batch, so the fold survives checkpoint
-    regeneration and batch regrouping. Runs with ``availableNow`` and
-    blocks until drained."""
+    regeneration and batch regrouping. Drains what is available at start
+    and returns."""
     from ..operators.ann_index import append_to_ivfpq_index
 
-    ledger_dir = f"{index_path}/ingest_ledger"
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        applied = _read_applied_ledger(sess, ledger_dir)
-        named = batch_df.withColumn("__src_file", F.input_file_name())
-        files = {
-            r[0] for r in named.select("__src_file").distinct().collect()
-        }
-        fresh = sorted(files - applied)
-        if not fresh:
-            return
-        inc = named
-        if files - set(fresh):  # partial replay: keep only unapplied files
-            inc = named.filter(F.col("__src_file").isin(fresh))
-        inc = inc.drop("__src_file")
-        append_to_ivfpq_index(inc, index_path, id_col=id_col, vec_col=vec_col)
-        local_df(sess, [(f,) for f in fresh], "path string").write.mode(
-            "append"
-        ).parquet(ledger_dir)
-
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_new_files(
+        spark,
+        source_dir,
+        schema,
+        f"{index_path}/ingest_ledger",
+        checkpoint_dir,
+        query_name,
+        lambda inc: append_to_ivfpq_index(
+            inc, index_path, id_col=id_col, vec_col=vec_col
+        ),
     )
-    q.processAllAvailable()
-    q.stop()
-    return q
 
 
 def heavy_hitters_refresh_stream(
@@ -349,13 +252,13 @@ def heavy_hitters_refresh_stream(
     Serving stays :func:`~tesseract_spark.operators.sketch.merge_heavy_hitters`
     over ``spark.read.parquet(summary_path)``.
 
-    Runs with ``availableNow`` and blocks until drained."""
+    Drains what is available at start and returns."""
     from ..operators.sketch import heavy_hitters_rollup
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
         # touched grains as a left-semi PROBE, not an unrolled OR chain: a
-        # backlog batch can touch thousands of grains (the availableNow
+        # backlog batch can touch thousands of grains (the
         # first drain over an existing store), and a per-grain predicate
         # would pay the superlinear driver plan tax the quantile fold
         # rewrite documents; the semi-join is constant plan size. eqNullSafe
@@ -377,20 +280,8 @@ def heavy_hitters_refresh_stream(
             .join(F.broadcast(touched), cond, "leftsemi")
         )
         roll = heavy_hitters_rollup(full, fine_cols, member_col, capacity)
-        roll.repartition(*[F.col(c) for c in fine_cols]).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            *fine_cols
-        ).parquet(summary_path)
+        rewrite_partitions(roll, summary_path, fine_cols)
 
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch(
+        _file_stream(spark, source_dir, schema), fold, checkpoint_dir, query_name
     )
-    q.awaitTermination()
-    return q

@@ -11,13 +11,11 @@ equivalence test pins both to each other.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .events import EVENTS_SCHEMA, _normalize_ts
+from .drive import _drain_to_memory, _events_stream, _staged_events
+from .events import _normalize_ts
 
 
 def stream_interval_join(
@@ -59,24 +57,12 @@ def stream_interval_join_demo(
     """Run purchases⋈clicks-in-preceding-hour as a REAL stream-stream join
     over the file-streamed events source; returns the joined pairs from the
     in-memory sink."""
-    stage = tempfile.mkdtemp(prefix="events_ssj_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _normalize_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(stage))
-    purchases = stream.filter(F.col("event_type") == "purchase")
-    clicks = stream.filter(F.col("event_type") == "click")
-    joined = stream_interval_join(purchases, clicks, "user_id", window_seconds)
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    with _staged_events(sf_dir) as stage:
+        stream = _events_stream(spark, stage)
+        purchases = stream.filter(F.col("event_type") == "purchase")
+        clicks = stream.filter(F.col("event_type") == "click")
+        joined = stream_interval_join(purchases, clicks, "user_id", window_seconds)
+        return _drain_to_memory(joined, query_name, "append")
 
 
 def stream_static_enrich_demo(
@@ -88,33 +74,22 @@ def stream_static_enrich_demo(
     per-user profile (here: historical mean event value from the at-rest
     data). The static side is broadcast per micro-batch — no stream state at
     all, the standard dimension-enrichment shape for streaming cube ingest."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # exact decimal numerator: double avg is partitioning-order dependent,
-    # and the equivalence test recomputes this profile independently
-    profile = (
-        _normalize_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-        .groupBy("user_id")
-        .agg(
-            (
-                F.sum(F.col("value").cast("decimal(38,6)")).cast("double")
-                / F.count("value")
-            ).alias("user_mean_value")
+    with _staged_events(sf_dir) as stage:
+        # the stream sets nanosAsLong, which the static profile read needs too
+        stream = _events_stream(spark, stage)
+        # exact decimal numerator: double avg is partitioning-order dependent,
+        # and the equivalence test recomputes this profile independently
+        profile = (
+            _normalize_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+            .groupBy("user_id")
+            .agg(
+                (
+                    F.sum(F.col("value").cast("decimal(38,6)")).cast("double")
+                    / F.count("value")
+                ).alias("user_mean_value")
+            )
         )
-    )
-    stage = tempfile.mkdtemp(prefix="events_enrich_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    stream = _normalize_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(stage))
-    enriched = stream.join(F.broadcast(profile), "user_id", "left").select(
-        "event_id", "user_id", "value", "user_mean_value"
-    )
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+        enriched = stream.join(F.broadcast(profile), "user_id", "left").select(
+            "event_id", "user_id", "value", "user_mean_value"
+        )
+        return _drain_to_memory(enriched, query_name, "append")

@@ -17,7 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from .events import EVENTS_SCHEMA, _normalize_ts, read_events
+from .drive import _drain_to_memory, _events_stream, _staged_events
+from .events import read_events
 
 
 def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
@@ -86,35 +87,18 @@ def streaming_sessionize(
 ) -> DataFrame:
     """Native session_window over a real streaming query (complete mode via the
     in-memory sink; at production scale use append mode + watermark closure)."""
-    import os
-    import tempfile
-
-    stage = tempfile.mkdtemp(prefix="events_sessions_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _normalize_ts(
-        spark.readStream.schema(EVENTS_SCHEMA).parquet(stage)
-    ).withWatermark("ts", "2 hours")
-    agg = (
-        stream.groupBy(
-            F.session_window("ts", f"{gap_minutes} minutes").alias("w"), "user_id"
+    with _staged_events(sf_dir) as stage:
+        stream = _events_stream(spark, stage).withWatermark("ts", "2 hours")
+        agg = (
+            stream.groupBy(
+                F.session_window("ts", f"{gap_minutes} minutes").alias("w"), "user_id"
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("total_value"),
+                F.min("ts").alias("session_start"),
+                F.max("ts").alias("session_end"),
+            )
+            .select("user_id", "session_start", "session_end", "n_events", "total_value")
         )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("total_value"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-        .select("user_id", "session_start", "session_end", "n_events", "total_value")
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+        return _drain_to_memory(agg, query_name, "complete")

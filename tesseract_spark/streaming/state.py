@@ -20,12 +20,12 @@ Design notes for 100 TB streams:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .events import EVENTS_SCHEMA, _normalize_ts
+from .drive import _drain_to_memory, _events_stream
 
 STATE_SCHEMA = T.StructType(
     [
@@ -94,8 +94,7 @@ def user_stats_streaming(
 ) -> DataFrame:
     """Run the stateful operator as a real streaming query over a parquet file
     stream; returns the latest emitted row per user from the in-memory sink."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = _normalize_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(source_dir))
+    stream = _events_stream(spark, source_dir)
     updated = stream.groupBy("user_id").applyInPandasWithState(
         make_update_user_stats(),
         outputStructType=OUTPUT_SCHEMA,
@@ -103,21 +102,12 @@ def user_stats_streaming(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        updated.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # the memory sink accumulates one row per user per micro-batch; the latest
-    # (max n_events) row per user is the final state
-    sink = spark.sql(f"SELECT * FROM {query_name}")
-    from pyspark.sql import Window
+    return _latest_per_user(_drain_to_memory(updated, query_name, "update"))
 
+
+def _latest_per_user(sink: DataFrame) -> DataFrame:
+    """The update-mode memory sink accumulates one row per user per
+    micro-batch; the latest (max n_events) row per user is the final state."""
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         sink.withColumn("__rn", F.row_number().over(w))
@@ -136,8 +126,9 @@ def make_user_stats_processor():
 
     Runtime requirement: the TWS Python runtime talks protobuf to the JVM
     state server (``pyspark.sql.streaming.proto``), so ``google.protobuf``
-    must be installed; environments without it (this container) should use
-    :func:`user_stats_streaming` — the equivalence test skips accordingly."""
+    must be importable by the Python workers; the equivalence test finds a
+    runtime and, when the interpreter itself lacks one, runs in a subprocess
+    with it on ``PYTHONPATH``."""
     import pandas as _pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
@@ -193,34 +184,15 @@ def user_stats_streaming_tws(
     """The same per-user running stats through ``transformWithStateInPandas``
     (RocksDB-backed state store — the production state backend; the old API's
     HDFS-backed store holds state on-heap)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    stream = _normalize_ts(spark.readStream.schema(EVENTS_SCHEMA).parquet(source_dir))
+    stream = _events_stream(spark, source_dir)
     updated = stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=make_user_stats_processor(),
         outputStructType=OUTPUT_SCHEMA,
         outputMode="Update",
         timeMode="None",
     )
-    q = (
-        updated.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sink = spark.sql(f"SELECT * FROM {query_name}")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        sink.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return _latest_per_user(_drain_to_memory(updated, query_name, "update"))

@@ -231,6 +231,30 @@ def test_load_grain_fresh_navigator(nav, builder, spark):
     )
 
 
+def test_load_grain_pre_sketch_meta_gets_defaults(nav, builder, spark, tmp_path):
+    """A meta written before the sketch tier (no sketch_measures/sketch_p
+    columns) still loads, with the dataclass defaults, and serves."""
+    src = nav.grains[0]
+    old = str(tmp_path / "pre_sketch")
+    shutil.copytree(f"{src.path}/partials", f"{old}/partials")
+    spark.read.parquet(f"{src.path}/meta").drop("sketch_measures", "sketch_p").write.parquet(
+        f"{old}/meta"
+    )
+    nav2 = AggregateNavigator(builder)
+    g = nav2.load_grain(spark, old)
+    assert g.sketch_measures == [] and g.sketch_p == 0
+    assert (g.cube, g.drilldowns, g.measures, g.columns, g.dtypes) == (
+        src.cube, src.drilldowns, src.measures, src.columns, src.dtypes
+    )
+    assert (g.partition_by, g.implicit_sig, g.parents, g.n_rows) == (
+        src.partition_by, src.implicit_sig, src.parents, src.n_rows
+    )
+    q = _q(drilldowns=["Part.Brand"], measures=["Quantity", "Row Count"])
+    assert sorted(nav2.serve("lineitem_sales", q).collect()) == sorted(
+        builder.dataframe("lineitem_sales", q).collect()
+    )
+
+
 def test_logic_layer_routes_through_navigator(nav, builder):
     from tesseract_spark.logic.layer import LogicLayer
 

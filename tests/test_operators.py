@@ -5569,3 +5569,62 @@ def test_png_16bit_depth_and_color_key():
         p.decode_png(p._png_assemble(2, 1, 3, 0, b"\x00\x00"))
     with pytest.raises(ValueError, match="interlace method"):
         p.decode_png(p._png_assemble(2, 1, 8, 0, b"\x00\x00\x00", interlace=2))
+
+
+def test_staged_stream_dirs_are_removed(spark, sf_dir, tmp_path, monkeypatch):
+    """The demo drivers stage events.parquet into a temp dir for the file
+    stream; the dir (and its symlinks, never their target) must be gone
+    once the driver returns."""
+    import os
+    import tempfile
+
+    from tesseract_spark.streaming.dedup import streaming_dedup_demo
+    from tesseract_spark.streaming.events import run_streaming_demo
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert run_streaming_demo(spark, sf_dir, query_name="t_stage_ev").count() > 0
+    assert streaming_dedup_demo(spark, sf_dir, query_name="t_stage_dd").count() > 0
+    assert list(tmp_path.iterdir()) == []
+    assert os.path.isfile(f"{sf_dir}/events.parquet")
+
+
+def test_local_input_bytes_walks_partition_dirs(tmp_path):
+    """ADVICE: a hive-partitioned local table summed to 0 bytes, so _embs
+    skipped its spread. Partition subdirectories count; ``_``/``.``-prefixed
+    entries are skipped at every level."""
+    from tesseract_spark.catalog import _local_input_bytes
+
+    t = tmp_path / "t"
+    (t / "k=1").mkdir(parents=True)
+    (t / "k=1" / "part.parquet").write_bytes(b"x" * 100)
+    (t / "k=1" / ".part.parquet.crc").write_bytes(b"c" * 7)
+    (t / "k=2" / "j=a").mkdir(parents=True)
+    (t / "k=2" / "j=a" / "part.parquet").write_bytes(b"y" * 50)
+    (t / "_temporary" / "0").mkdir(parents=True)
+    (t / "_temporary" / "0" / "part.parquet").write_bytes(b"z" * 1000)
+    (t / "_SUCCESS").write_bytes(b"")
+    (t / "flat.parquet").write_bytes(b"f" * 3)
+    assert _local_input_bytes(str(t)) == 153
+    assert _local_input_bytes(str(t / "flat.parquet")) == 3
+
+
+def test_py4j_nodelay_patch_is_noop_without_clientserver_internals(monkeypatch):
+    """With py4j's ClientServerConnection lacking connect_to_java_server and
+    a session lacking ``_sc``, the NODELAY patch returns quietly and marks
+    nothing as patched."""
+    from py4j import clientserver
+
+    from tesseract_spark import session
+
+    class StubConnection:
+        pass
+
+    class FakeSession:
+        pass
+
+    monkeypatch.setattr(clientserver, "ClientServerConnection", StubConnection)
+    fake = FakeSession()
+    session._enable_py4j_nodelay()
+    session._nodelay_existing(fake)
+    assert not hasattr(StubConnection, "_tsk_nodelay")
+    assert not hasattr(fake, "_tsk_nodelay")
