@@ -254,15 +254,41 @@ class _DecodeTable(dict):
 
     __slots__ = ("lut", "lut16", "lutw", "_frozen")
 
-    def __setitem__(self, key, value):
+    def _check_writable(self) -> None:
         if getattr(self, "_frozen", False):
             raise TypeError("shared _DecodeTable is read-only; copy it first")
+
+    def __setitem__(self, key, value):
+        self._check_writable()
         super().__setitem__(key, value)
 
     def __delitem__(self, key):
-        if getattr(self, "_frozen", False):
-            raise TypeError("shared _DecodeTable is read-only; copy it first")
+        self._check_writable()
         super().__delitem__(key)
+
+    def __ior__(self, other):
+        self._check_writable()
+        return super().__ior__(other)
+
+    def update(self, *args, **kwargs):
+        self._check_writable()
+        super().update(*args, **kwargs)
+
+    def pop(self, *args):
+        self._check_writable()
+        return super().pop(*args)
+
+    def popitem(self):
+        self._check_writable()
+        return super().popitem()
+
+    def clear(self):
+        self._check_writable()
+        super().clear()
+
+    def setdefault(self, key, default=None):
+        self._check_writable()
+        return super().setdefault(key, default)
 
 
 def _build_lutw(table: "_DecodeTable") -> list[int]:

@@ -5,34 +5,62 @@ Extension beyond the reference's surface. Images/audio/video are carried as
 Arrow-batched ``mapInPandas`` so each task processes whole record batches (the
 only sane shape at 100 TB — per-row Python UDFs are ~100× slower).
 
-``decode_media`` performs REAL decoding for the container formats the Python
-standard library can parse without codecs: uncompressed BMP (24/32-bit BI_RGB,
-bottom-up and top-down), every spec-legal PNG layout (``operators/png.py``:
-all depths 1-16, all five color types, tRNS alpha/color keys, Adam7 — zero
-PNG boundaries since r15), binary PPM/PGM (P6/P5), and PCM WAV (via
-``wave``) — plus baseline, progressive, 12-bit and CMYK/YCCK JPEG through
-the from-scratch entropy codec in ``operators/jpeg.py``. The remaining
-honest ``NotImplementedError`` boundaries are arithmetic-coded and
-hierarchical JPEG (jpeg.py), frame-level video decode (H.264/H.265 —
-mp4.py's container math is real), and non-BI_RGB / sub-24-bit BMP and
-16-bit PPM variants here. The
-``q_multimodal_decode`` catalog entry drives the BMP path end-to-end through
-Spark with an md5-pinned DuckDB oracle: payloads are wrapped into real BMP
-files, parsed back by the real header/stride/flip/BGR logic, and the decoded
-pixel stream must hash to what the oracle predicts from the source bytes;
-``q_image_jpeg_decode`` does the same for JPEG over the mathematically
-exact constant-block subclass (see ``decoded_jpeg_features``).
+``decode_media`` performs REAL decoding through one codec module per
+format, each registered with cloudpickle's pickle-by-value so executors
+need no repo PYTHONPATH: uncompressed BMP (24/32-bit BI_RGB, bottom-up and
+top-down), binary PPM/PGM (P6/P5) and PCM WAV in ``operators/rawmedia.py``;
+every spec-legal PNG layout in ``operators/png.py`` (zero PNG boundaries
+since r15); baseline, progressive, 12-bit and CMYK/YCCK JPEG through the
+from-scratch entropy codec in ``operators/jpeg.py``. The remaining honest
+``NotImplementedError`` boundaries are arithmetic-coded and hierarchical
+JPEG (jpeg.py), frame-level video decode (H.264/H.265 — mp4.py's container
+math is real), and non-BI_RGB / sub-24-bit BMP and 16-bit PPM variants
+(rawmedia.py).
+
+Every fixture entry below is one ``row`` function handed to
+``_map_payloads``, the single driver that ships the codecs, maps each
+Arrow batch row by row and assembles the output frame. The
+``q_multimodal_decode`` catalog entry drives the BMP path end-to-end
+through Spark with an md5-pinned DuckDB oracle: payloads are wrapped into
+real BMP files, parsed back by the real header/stride/flip/BGR logic, and
+the decoded pixel stream must hash to what the oracle predicts from the
+source bytes; ``q_image_jpeg_decode`` does the same for JPEG over the
+mathematically exact constant-block subclass (see
+``decoded_jpeg_features``).
 """
 
 from __future__ import annotations
 
-import struct
+import math
 from collections.abc import Iterator
 from functools import reduce
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import png, rawmedia
+
+# The PNG codec (operators/png.py) and the uncompressed codecs with the hex
+# md5 (operators/rawmedia.py) ship to executors by value; their public
+# names are re-exported here because the multimodal API predates the splits.
+from .png import (  # noqa: F401  (re-exported public API)
+    _paeth,
+    _png_chunk,
+    decode_png,
+    encode_png_gray,
+    encode_png_gray_alpha,
+    encode_png_palette,
+    encode_png_rgba,
+)
+from .rawmedia import (  # noqa: F401  (re-exported public API)
+    decode_bmp,
+    decode_ppm,
+    decode_wav,
+    encode_bmp_gray,
+    md5_hex,
+)
 
 FEATURE_SCHEMA = (
     "doc_id long, modality string, n_bytes long, sha256_8 string, "
@@ -50,133 +78,6 @@ def attach_binary_payload(
         F.encode(F.col(text_col), "UTF-8").alias("payload"),
         F.lit("text").alias("modality"),
     )
-
-
-def encode_bmp_gray(pixels: bytes, width: int, height: int) -> bytes:
-    """Build a real 24-bit uncompressed bottom-up BMP from a grayscale byte
-    grid (row-major, top-down input; R=G=B=byte). Rows are 4-byte padded per
-    the format. Inverse of :func:`decode_bmp` — used to manufacture genuine
-    BMP payloads from testdata bytes."""
-    assert len(pixels) >= width * height
-    stride = (width * 3 + 3) & ~3
-    pad = b"\x00" * (stride - width * 3)
-    rows = []
-    for y in range(height - 1, -1, -1):  # bottom-up storage order
-        row = pixels[y * width : (y + 1) * width]
-        rows.append(b"".join(bytes((b, b, b)) for b in row) + pad)
-    data = b"".join(rows)
-    # 14-byte file header + 40-byte BITMAPINFOHEADER
-    header = struct.pack("<2sIHHI", b"BM", 54 + len(data), 0, 0, 54) + struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24, 0, len(data), 2835, 2835, 0, 0
-    )
-    return header + data
-
-
-def decode_bmp(payload: bytes) -> dict:
-    """Parse an uncompressed 24/32-bit BI_RGB BMP: validates the headers,
-    honors the row stride and bottom-up/top-down orientation, swaps BGR(A) to
-    a top-down row-major RGB stream."""
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    (pixel_off,) = struct.unpack_from("<I", payload, 10)
-    dib_size, width, height_raw = struct.unpack_from("<Iii", payload, 14)
-    if dib_size < 40:
-        raise NotImplementedError(f"BITMAPCOREHEADER (size {dib_size}) unsupported")
-    (bpp,) = struct.unpack_from("<H", payload, 28)
-    (compression,) = struct.unpack_from("<I", payload, 30)
-    if compression != 0:
-        raise NotImplementedError(f"compressed BMP (method {compression}) unsupported")
-    if bpp not in (24, 32):
-        raise NotImplementedError(f"{bpp}-bit BMP unsupported (24/32 only)")
-    height, bottom_up = abs(height_raw), height_raw > 0
-    n_ch = bpp // 8
-    if width < 0:
-        raise ValueError(f"negative BMP width {width}")
-    stride = (width * n_ch + 3) & ~3
-    if len(payload) < pixel_off + stride * height:
-        raise ValueError(
-            f"truncated BMP: {len(payload)} bytes < "
-            f"{pixel_off + stride * height} required by header dims"
-        )
-    out = bytearray()
-    for y in range(height):
-        src_y = (height - 1 - y) if bottom_up else y
-        row = payload[pixel_off + src_y * stride :][: width * n_ch]
-        for x in range(width):
-            px = row[x * n_ch : x * n_ch + n_ch]
-            out += bytes((px[2], px[1], px[0]))  # BGR(A) -> RGB
-    return {"width": width, "height": height, "channels": 3, "pixels": bytes(out)}
-
-
-def decode_ppm(payload: bytes) -> dict:
-    """Parse binary PPM (P6, RGB) / PGM (P5, gray) with maxval <= 255."""
-    magic = payload[:2]
-    if magic not in (b"P6", b"P5"):
-        raise ValueError("not a binary PPM/PGM payload")
-    # header: magic, whitespace/comment-separated width, height, maxval
-    pos, fields = 2, []
-    while len(fields) < 3:
-        while pos < len(payload) and payload[pos : pos + 1].isspace():
-            pos += 1
-        if payload[pos : pos + 1] == b"#":
-            while payload[pos : pos + 1] not in (b"\n", b""):
-                pos += 1
-            continue
-        start = pos
-        while pos < len(payload) and not payload[pos : pos + 1].isspace():
-            pos += 1
-        fields.append(int(payload[start:pos]))
-    pos += 1  # single whitespace after maxval
-    width, height, maxval = fields
-    if maxval > 255:
-        raise NotImplementedError("16-bit PPM unsupported")
-    if width < 0 or height < 0:
-        raise ValueError(f"negative PPM dimensions {width}x{height}")
-    n_ch = 3 if magic == b"P6" else 1
-    raw = payload[pos : pos + width * height * n_ch]
-    if len(raw) < width * height * n_ch:
-        raise ValueError(
-            f"truncated PPM: {len(raw)} data bytes < {width * height * n_ch} "
-            "required by header dims"
-        )
-    pixels = raw if n_ch == 3 else b"".join(bytes((b, b, b)) for b in raw)
-    return {"width": width, "height": height, "channels": 3, "pixels": pixels}
-
-
-# PNG codec: moved to operators/png.py (stdlib-only module registered
-# by value for executor shipping); names re-exported here because the
-# public multimodal API predates the split.
-from .png import (  # noqa: F401  (re-exported public API)
-    _paeth,
-    _png_chunk,
-    decode_png,
-    encode_png_gray,
-    encode_png_gray_alpha,
-    encode_png_palette,
-    encode_png_rgba,
-)
-
-
-
-def decode_wav(payload: bytes) -> dict:
-    """Parse PCM WAV via the stdlib ``wave`` module. Hostile chunk
-    structures make ``wave``/``chunk`` raise bare RuntimeError/OSError
-    (chunk.py seek guards); normalize those to ValueError so callers see
-    one bounded corrupt-input exception family (codec fuzz contract)."""
-    import io
-    import wave
-
-    try:
-        with wave.open(io.BytesIO(payload)) as w:
-            return {
-                "sample_rate": w.getframerate(),
-                "n_channels": w.getnchannels(),
-                "sample_width": w.getsampwidth(),
-                "n_frames": w.getnframes(),
-                "pcm": w.readframes(w.getnframes()),
-            }
-    except (RuntimeError, OSError) as e:
-        raise ValueError(f"corrupt WAV chunk structure: {e!r}") from e
 
 
 #: optional native decoder plugins, format key -> callable(payload) -> the
@@ -262,14 +163,9 @@ def make_worker_decoder_installer(fmt: str, factory, verify: bool = True):
         )
     import uuid as _uuid
 
-    from pyspark import cloudpickle as _cp
-
     from . import jpeg as _jpeg
 
-    try:
-        _cp.register_pickle_by_value(_jpeg)
-    except Exception:
-        pass
+    _ship_by_value(_jpeg)
     gate = _jpeg.verify_decoder_equivalence
     # per-installer token: two installers for the same format must not
     # share a memo entry in a reused worker (a later factory would be
@@ -324,6 +220,51 @@ def decode_media(payload: bytes, modality: str):
         "in this container; plug a decoder in here (register_native_decoder "
         "for JPEG), the mapInPandas plumbing is already batch-shaped"
     )
+
+
+def _ship_by_value(*modules) -> None:
+    """Register codec modules with cloudpickle's pickle-by-value, so the
+    closures that call them run on executors without the repo on their
+    PYTHONPATH (module-level functions otherwise pickle by reference)."""
+    from pyspark import cloudpickle
+
+    for mod in modules:
+        cloudpickle.register_pickle_by_value(mod)
+
+
+def _payloads(documents: DataFrame) -> DataFrame:
+    """``(doc_id, payload)``: each document's UTF-8 bytes, the stand-in
+    media payload the fixture entries below wrap into real containers."""
+    return documents.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
+
+
+def _map_payloads(
+    df: DataFrame, schema: str, row, *codecs, setup=None
+) -> DataFrame:
+    """The one Arrow-batched row map behind every fixture entry here.
+
+    ``row(doc_id, payload, *setup())`` returns ``None`` (skip the row), one
+    tuple in ``schema``'s column order, or a list of such tuples (1→N
+    expansion). ``setup`` runs once per partition inside the Python worker,
+    for per-process state such as a native decoder installer. ``rawmedia``
+    and the given ``codecs`` modules ship by value with the closure; the
+    closure itself is local, so cloudpickle ships it by value too."""
+    _ship_by_value(rawmedia, *codecs)
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ctx = setup() if setup is not None else ()
+        for pdf in it:
+            rows = []
+            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
+                out = row(did, payload, *ctx)
+                if isinstance(out, list):
+                    rows.extend(out)
+                elif out is not None:
+                    rows.append(out)
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(batches, schema=schema)
 
 
 def extract_features(df: DataFrame) -> DataFrame:
@@ -398,84 +339,33 @@ def decoded_image_features(documents: DataFrame, width: int = 16) -> DataFrame:
     direction changes the hash, and the DuckDB oracle predicts it from the
     source bytes independently.
 
-    Batch closure is self-contained (stdlib-only, shipped by value) so
-    executors need no repo PYTHONPATH — the in-closure encode/decode pair is
-    generated from the module-level implementations' shared logic; semantics
-    are pinned equal by tests/test_operators round-trip tests."""
-    docs = documents.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
+    The codec is ``operators/rawmedia.py``, shipped by value with the
+    closure, so executors need no repo PYTHONPATH."""
+    return _decoded_gray_features(
+        documents, width, rawmedia.encode_bmp_gray, rawmedia.decode_bmp
+    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-        import numpy as _np
-        import struct as _struct
 
-        def enc(pixels: bytes, w: int, h: int) -> bytes:
-            stride = (w * 3 + 3) & ~3
-            pad = b"\x00" * (stride - w * 3)
-            rows = [
-                b"".join(bytes((b, b, b)) for b in pixels[y * w : (y + 1) * w]) + pad
-                for y in range(h - 1, -1, -1)
-            ]
-            data = b"".join(rows)
-            return (
-                _struct.pack("<2sIHHI", b"BM", 54 + len(data), 0, 0, 54)
-                + _struct.pack(
-                    "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0
-                )
-                + data
-            )
+def _decoded_gray_features(
+    documents: DataFrame, width: int, encode, decode, *codecs
+) -> DataFrame:
+    """The gray round trip shared by the BMP and PNG decode entries: the
+    first ``width * h`` payload bytes as an ``h``-row gray image, encoded
+    and decoded by the given codec, hashed and averaged."""
 
-        def dec(payload: bytes) -> dict:
-            assert payload[:2] == b"BM"
-            (off,) = _struct.unpack_from("<I", payload, 10)
-            _, w, h_raw = _struct.unpack_from("<Iii", payload, 14)
-            (bpp,) = _struct.unpack_from("<H", payload, 28)
-            (comp,) = _struct.unpack_from("<I", payload, 30)
-            assert comp == 0 and bpp in (24, 32)
-            h, bottom_up = abs(h_raw), h_raw > 0
-            n_ch = bpp // 8
-            stride = (w * n_ch + 3) & ~3
-            out = bytearray()
-            for y in range(h):
-                sy = (h - 1 - y) if bottom_up else y
-                row = payload[off + sy * stride :][: w * n_ch]
-                for x in range(w):
-                    px = row[x * n_ch : x * n_ch + n_ch]
-                    out += bytes((px[2], px[1], px[0]))
-            return {"width": w, "height": h, "pixels": bytes(out)}
+    def row(did, payload):
+        h = len(payload) // width
+        if h == 0:
+            return None
+        img = decode(encode(bytes(payload[: width * h]), width, h))
+        px = img["pixels"]
+        # exact int sum via numpy (int64 — no overflow for any realistic
+        # stream), bit-identical to sum(px): a deterministic float matching
+        # the oracle's SUM(...)/COUNT(...) to the last ulp
+        mean = int(np.frombuffer(px, np.uint8).sum(dtype=np.int64)) / len(px)
+        return did, img["width"], img["height"], 3, md5_hex(px), mean
 
-        for pdf in it:
-            out = {
-                "doc_id": [], "width": [], "height": [], "channels": [],
-                "pixels_md5": [], "mean_pixel": [],
-            }  # fmt: skip
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                h = len(payload) // width
-                if h == 0:
-                    continue
-                img = dec(enc(payload[: width * h], width, h))
-                px = img["pixels"]
-                out["doc_id"].append(did)
-                out["width"].append(img["width"])
-                out["height"].append(img["height"])
-                out["channels"].append(3)
-                # md5 of the LOWERCASE HEX of the pixel stream (not the raw
-                # bytes): engine-portable for every byte value — DuckDB's
-                # md5 takes VARCHAR only, and an arbitrary decoded stream
-                # need not be valid UTF-8 (round-7 byte-faithfulness fix,
-                # same class as the ahash/audio ADVICE item)
-                out["pixels_md5"].append(
-                    _hashlib.md5(px.hex().encode()).hexdigest()
-                )
-                out["mean_pixel"].append(
-                    # exact int sum via numpy (int64 — no overflow for
-                    # any realistic stream), bit-identical to sum(px)
-                    int(_np.frombuffer(px, _np.uint8).sum(dtype=_np.int64))
-                    / len(px)
-                )
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(batches, schema=DECODE_SCHEMA)
+    return _map_payloads(_payloads(documents), DECODE_SCHEMA, row, *codecs)
 
 
 def decoded_image_features_oracle_sql(table: str = "documents", width: int = 16) -> str:
@@ -515,27 +405,14 @@ def sample_frames(
     convention as the decode entries — so the oracle can mirror it).
     Trailing partial frames are dropped, matching fixed-frame decoders."""
 
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
+    def row(did, payload):
+        n = len(payload) // frame_size
+        return [
+            (did, fi, md5_hex(payload[fi * frame_size : (fi + 1) * frame_size]), n)
+            for fi in range(0, n, every)
+        ]
 
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_md5": [], "n_frames": []}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n = len(payload) // frame_size
-                for fi in range(0, n, every):
-                    out["doc_id"].append(did)
-                    out["frame_idx"].append(fi)
-                    out["frame_md5"].append(
-                        _hashlib.md5(
-                            payload[fi * frame_size : (fi + 1) * frame_size]
-                            .hex()
-                            .encode()
-                        ).hexdigest()
-                    )
-                    out["n_frames"].append(n)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(frames, schema=FRAME_SCHEMA)
+    return _map_payloads(df, FRAME_SCHEMA, row)
 
 
 def sample_frames_oracle_sql(
@@ -566,31 +443,16 @@ def resize_payload_grid(df: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFr
     pixels are identified by md5 so the SQL oracle can mirror the exact
     index math."""
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-        import math as _math
+    def row(did, payload):
+        side = math.isqrt(len(payload))
+        px = bytes(
+            payload[(i * side // out_h) * side + (j * side // out_w)]
+            for i in range(out_h)
+            for j in range(out_w)
+        )
+        return did, side, out_w, out_h, md5_hex(px)
 
-        for pdf in batches:
-            out = {"doc_id": [], "side": [], "out_w": [], "out_h": [], "pixels_md5": []}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                side = _math.isqrt(len(payload))
-                px = bytes(
-                    payload[(i * side // out_h) * side + (j * side // out_w)]
-                    for i in range(out_h)
-                    for j in range(out_w)
-                )
-                out["doc_id"].append(did)
-                out["side"].append(side)
-                out["out_w"].append(out_w)
-                out["out_h"].append(out_h)
-                # lowercase-hex md5 — engine-portable for every byte value
-                # (round 7, same convention as the decode/frame entries)
-                out["pixels_md5"].append(
-                    _hashlib.md5(px.hex().encode()).hexdigest()
-                )
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(resize, schema=RESIZE_SCHEMA)
+    return _map_payloads(df, RESIZE_SCHEMA, row)
 
 
 def resize_payload_grid_oracle_sql(
@@ -625,57 +487,11 @@ def decoded_png_features(documents: DataFrame, width: int = 16) -> DataFrame:
     direction changes the hash, and the DuckDB oracle predicts it from the
     source bytes independently (round-trip ≡ identity).
 
-    Same plumbing contract as :func:`decoded_image_features`: Arrow-batched
-    ``mapInPandas``, ``operators.png`` registered with cloudpickle's
-    pickle-by-value so executors need no repo PYTHONPATH, zero shuffle.
-    (r15: the former self-contained inline mini-codec — a pre-split relic
-    duplicating png.py's exact algorithm — is gone; this entry now drives
-    the one real, vectorized codec the rest of the PNG surface uses.)"""
-    from pyspark import cloudpickle as _cp
-
-    from . import png as _png
-
-    try:
-        _cp.register_pickle_by_value(_png)
-    except Exception:
-        pass  # already registered / older cloudpickle: reference pickling
-    docs = documents.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
-    enc_gray, dec = _png.encode_png_gray, _png.decode_png
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-        import numpy as _np
-
-        for pdf in it:
-            out = {
-                "doc_id": [], "width": [], "height": [], "channels": [],
-                "pixels_md5": [], "mean_pixel": [],
-            }  # fmt: skip
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                h = len(payload) // width
-                if h == 0:
-                    continue
-                img = dec(enc_gray(bytes(payload[: width * h]), width, h))
-                px = img["pixels"]
-                out["doc_id"].append(did)
-                out["width"].append(img["width"])
-                out["height"].append(img["height"])
-                out["channels"].append(3)
-                # lowercase-hex md5 — see decoded_image_features
-                out["pixels_md5"].append(
-                    _hashlib.md5(px.hex().encode()).hexdigest()
-                )
-                # exact integer sum -> deterministic float, matching the
-                # oracle's SUM(...)/COUNT(...) to the last ulp
-                out["mean_pixel"].append(
-                    # exact int sum via numpy (int64 — no overflow for
-                    # any realistic stream), bit-identical to sum(px)
-                    int(_np.frombuffer(px, _np.uint8).sum(dtype=_np.int64))
-                    / len(px)
-                )
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(batches, schema=DECODE_SCHEMA)
+    Same row body as :func:`decoded_image_features`; only the codec
+    differs: ``operators.png``, shipped by value with the closure."""
+    return _decoded_gray_features(
+        documents, width, png.encode_png_gray, png.decode_png, png
+    )
 
 
 PNG_PALETTE_SCHEMA = (
@@ -729,81 +545,49 @@ def decoded_png_palette_features(
     (r14 review)."""
     if width < 4 or width % 4:
         raise ValueError(f"width must be a positive multiple of 4, got {width}")
-    from pyspark import cloudpickle as _cp
-
-    from . import png as _png
-
-    try:
-        _cp.register_pickle_by_value(_png)
-    except Exception:
-        pass  # already registered / older cloudpickle: reference pickling
-    docs = documents.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
     w = width
     enc_pal, enc_rgba, enc_gray, dec = (
-        _png.encode_png_palette,
-        _png.encode_png_rgba,
-        _png.encode_png_gray,
-        _png.decode_png,
+        png.encode_png_palette,
+        png.encode_png_rgba,
+        png.encode_png_gray,
+        png.decode_png,
     )
     pal8, trns, pal4 = _PAL8, _PAL8_TRNS, _PAL4
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
+    def row(did, payload):
+        hb = len(payload) // w
+        if hb == 0:
+            return None
+        used = bytes(payload[: hb * w])
+        d8 = dec(enc_pal(used, w, hb, pal8, trans=trns))
+        # nibble / crumb expansion vectorized (r17): the per-byte
+        # Python loops were O(payload) interpreter work per doc;
+        # the strided stores emit the identical MSB-first streams
+        ua = np.frombuffer(used, np.uint8)
+        nib_a = np.empty(2 * len(ua), np.uint8)
+        nib_a[0::2] = ua >> 4
+        nib_a[1::2] = ua & 0xF
+        nib = nib_a.tobytes()
+        d4 = dec(enc_pal(nib, 2 * w, hb, pal4, depth=4))
+        da = dec(enc_rgba(used, w // 4, hb))
+        # r15 sub-8-bit grayscale: nibbles as raw 4-bit samples with
+        # a color key on raw 7; crumbs as 2-bit samples in the Adam7
+        # layout (the sub-byte deinterlacer under the hash gate)
+        dg4 = dec(enc_gray(nib, 2 * w, hb, depth=4, trans_key=7))
+        cr_a = np.empty(4 * len(ua), np.uint8)
+        cr_a[0::4] = ua >> 6
+        cr_a[1::4] = (ua >> 4) & 3
+        cr_a[2::4] = (ua >> 2) & 3
+        cr_a[3::4] = ua & 3
+        dg2 = dec(enc_gray(cr_a.tobytes(), 4 * w, hb, depth=2, interlace=True))
+        return (
+            did, w, hb,
+            md5_hex(d8["pixels"]), md5_hex(d8["alpha"]), md5_hex(d4["pixels"]),
+            md5_hex(da["pixels"]), md5_hex(da["alpha"]),
+            md5_hex(dg4["pixels"]), md5_hex(dg4["alpha"]), md5_hex(dg2["pixels"]),
+        )  # fmt: skip
 
-        import numpy as _np
-
-        def h(b: bytes) -> str:
-            return _hashlib.md5(b.hex().encode()).hexdigest()
-
-        for pdf in it:
-            out = {
-                "doc_id": [], "width": [], "height": [], "pal_rgb_md5": [],
-                "pal_alpha_md5": [], "pal4_rgb_md5": [], "rgba_rgb_md5": [],
-                "rgba_alpha_md5": [], "gray4_rgb_md5": [],
-                "gray4_alpha_md5": [], "gray2i_rgb_md5": [],
-            }  # fmt: skip
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                hb = len(payload) // w
-                if hb == 0:
-                    continue
-                used = bytes(payload[: hb * w])
-                d8 = dec(enc_pal(used, w, hb, pal8, trans=trns))
-                # nibble / crumb expansion vectorized (r17): the per-byte
-                # Python loops were O(payload) interpreter work per doc;
-                # the strided stores emit the identical MSB-first streams
-                ua = _np.frombuffer(used, _np.uint8)
-                nib_a = _np.empty(2 * len(ua), _np.uint8)
-                nib_a[0::2] = ua >> 4
-                nib_a[1::2] = ua & 0xF
-                nib = nib_a.tobytes()
-                d4 = dec(enc_pal(nib, 2 * w, hb, pal4, depth=4))
-                da = dec(enc_rgba(used, w // 4, hb))
-                # r15 sub-8-bit grayscale: nibbles as raw 4-bit samples with
-                # a color key on raw 7; crumbs as 2-bit samples in the Adam7
-                # layout (the sub-byte deinterlacer under the hash gate)
-                dg4 = dec(enc_gray(nib, 2 * w, hb, depth=4, trans_key=7))
-                cr_a = _np.empty(4 * len(ua), _np.uint8)
-                cr_a[0::4] = ua >> 6
-                cr_a[1::4] = (ua >> 4) & 3
-                cr_a[2::4] = (ua >> 2) & 3
-                cr_a[3::4] = ua & 3
-                dg2 = dec(
-                    enc_gray(cr_a.tobytes(), 4 * w, hb, depth=2, interlace=True)
-                )
-                out["doc_id"].append(did)
-                out["width"].append(w)
-                out["height"].append(hb)
-                out["pal_rgb_md5"].append(h(d8["pixels"]))
-                out["pal_alpha_md5"].append(h(d8["alpha"]))
-                out["pal4_rgb_md5"].append(h(d4["pixels"]))
-                out["rgba_rgb_md5"].append(h(da["pixels"]))
-                out["rgba_alpha_md5"].append(h(da["alpha"]))
-                out["gray4_rgb_md5"].append(h(dg4["pixels"]))
-                out["gray4_alpha_md5"].append(h(dg4["alpha"]))
-                out["gray2i_rgb_md5"].append(h(dg2["pixels"]))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(batches, schema=PNG_PALETTE_SCHEMA)
+    return _map_payloads(_payloads(documents), PNG_PALETTE_SCHEMA, row, png)
 
 
 def decoded_png_palette_features_oracle_sql(
@@ -931,89 +715,49 @@ def decoded_jpeg_features(
     The closure references ``operators.jpeg`` registered with cloudpickle's
     pickle-by-value, so executors need no repo PYTHONPATH (the module
     contract shared by every multimodal closure here)."""
-    from pyspark import cloudpickle as _cp
-
     from . import jpeg as _jpeg
 
-    try:
-        _cp.register_pickle_by_value(_jpeg)
-    except Exception:
-        pass  # already registered / older cloudpickle: reference pickling
-    docs = documents.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
     wb = width_blocks
     encode_gray = (
         _jpeg.encode_jpeg_progressive_gray if progressive else _jpeg.encode_jpeg_gray
     )
     decode = _jpeg.decode_jpeg
-
     encode12 = _jpeg.encode_jpeg_gray
-    tb = twelve_bit
-    installer = native_installer
+    q8 = np.full((8, 8), 8, dtype=np.int32)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
+    def row(did, payload, decode_fn=decode):
+        hb = len(payload) // wb
+        if hb == 0:
+            return None
+        used = np.frombuffer(bytes(payload[: hb * wb]), dtype=np.uint8).reshape(hb, wb)
+        img = np.repeat(np.repeat(used, 8, axis=0), 8, axis=1)
+        dec = decode_fn(encode_gray(img, quant=q8, restart_interval=2))
+        px = dec["pixels"]
+        # exact int sum via numpy (int64 — no overflow for any realistic
+        # stream), bit-identical to sum(px)
+        mean = int(np.frombuffer(px, np.uint8).sum(dtype=np.int64)) / len(px)
+        out = (did, dec["width"], dec["height"], 3, md5_hex(px), mean)
+        if not twelve_bit:
+            return out
+        img12 = img.astype(np.uint16) << 4
+        # 12-bit stays on the reference codec even when a native plugin is
+        # installed: verify_decoder_equivalence gates 8-bit fixtures only,
+        # so routing SOF1 12-bit through an 8-bit-verified binding could
+        # silently drift pixels12_md5 (r14 review)
+        # restart_interval=2 (r16): same DRI cadence as the 8-bit fixture —
+        # decoded pixels (and so pixels12_md5) are bit-identical for the
+        # exact constant-block subclass with or without restarts, and the
+        # segmented stream decodes on the vectorized path; the no-restart
+        # scalar baseline path keeps its own oracle-gated fixture (the CMYK
+        # entry's plain variant)
+        dec12 = decode(encode12(img12, quant=q8, precision=12, restart_interval=2))
+        return (*out, md5_hex(dec12["pixels"]))
 
-        import numpy as _np
-
-        # executor-side native seam: install-and-verify once per worker
-        # process, fall back to the from-scratch codec when absent
-        decode_fn = installer() if installer is not None else decode
-        q8 = _np.full((8, 8), 8, dtype=_np.int32)
-        for pdf in it:
-            out = {
-                "doc_id": [], "width": [], "height": [], "channels": [],
-                "pixels_md5": [], "mean_pixel": [],
-            }  # fmt: skip
-            if tb:
-                out["pixels12_md5"] = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                hb = len(payload) // wb
-                if hb == 0:
-                    continue
-                used = _np.frombuffer(
-                    bytes(payload[: hb * wb]), dtype=_np.uint8
-                ).reshape(hb, wb)
-                img = _np.repeat(_np.repeat(used, 8, axis=0), 8, axis=1)
-                dec = decode_fn(encode_gray(img, quant=q8, restart_interval=2))
-                px = dec["pixels"]
-                out["doc_id"].append(did)
-                out["width"].append(dec["width"])
-                out["height"].append(dec["height"])
-                out["channels"].append(3)
-                out["pixels_md5"].append(
-                    _hashlib.md5(px.hex().encode()).hexdigest()
-                )
-                out["mean_pixel"].append(
-                    # exact int sum via numpy (int64 — no overflow for
-                    # any realistic stream), bit-identical to sum(px)
-                    int(_np.frombuffer(px, _np.uint8).sum(dtype=_np.int64))
-                    / len(px)
-                )
-                if tb:
-                    img12 = img.astype(_np.uint16) << 4
-                    # 12-bit stays on the reference codec even when a
-                    # native plugin is installed: verify_decoder_equivalence
-                    # gates 8-bit fixtures only, so routing SOF1 12-bit
-                    # through an 8-bit-verified binding could silently
-                    # drift pixels12_md5 (r14 review)
-                    # restart_interval=2 (r16): same DRI cadence as the
-                    # 8-bit fixture — decoded pixels (and so pixels12_md5)
-                    # are bit-identical for the exact constant-block
-                    # subclass with or without restarts, and the segmented
-                    # stream decodes on the vectorized path; the
-                    # no-restart scalar baseline path keeps its own
-                    # oracle-gated fixture (the CMYK entry's plain
-                    # variant)
-                    dec12 = decode(
-                        encode12(img12, quant=q8, precision=12, restart_interval=2)
-                    )
-                    out["pixels12_md5"].append(
-                        _hashlib.md5(dec12["pixels"].hex().encode()).hexdigest()
-                    )
-            yield pd.DataFrame(out)
-
+    # executor-side native seam: install-and-verify once per worker
+    # process, fall back to the from-scratch codec when absent
+    setup = (lambda: (native_installer(),)) if native_installer is not None else None
     schema = DECODE_SCHEMA + (", pixels12_md5 string" if twelve_bit else "")
-    return docs.mapInPandas(batches, schema=schema)
+    return _map_payloads(_payloads(documents), schema, row, _jpeg, setup=setup)
 
 
 def decoded_jpeg_features_oracle_sql(
@@ -1083,51 +827,28 @@ def decoded_jpeg_cmyk_features(
     the pytest PSNR tier. Same plumbing contract as the other decode
     fixtures: Arrow-batched ``mapInPandas``, zero shuffle,
     ``operators.jpeg`` registered pickle-by-value."""
-    from pyspark import cloudpickle as _cp
-
     from . import jpeg as _jpeg
 
-    try:
-        _cp.register_pickle_by_value(_jpeg)
-    except Exception:
-        pass
-    docs = documents.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
     wb = width_blocks
     enc, dec = _jpeg.encode_jpeg_cmyk, _jpeg.decode_jpeg
+    q8 = np.full((8, 8), 8, dtype=np.int32)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
+    def row(did, payload):
+        hb = len(payload) // (4 * wb)
+        if hb == 0:
+            return None
+        const = np.frombuffer(
+            bytes(payload[: hb * wb * 4]), dtype=np.uint8
+        ).reshape(hb, wb, 4)
+        img = np.repeat(np.repeat(const, 8, axis=0), 8, axis=1)
+        d_adobe = dec(enc(img, quant=q8, adobe=True, restart_interval=2))
+        d_plain = dec(enc(img, quant=q8, adobe=False))
+        return (
+            did, d_adobe["width"], d_adobe["height"],
+            md5_hex(d_adobe["pixels"]), md5_hex(d_plain["pixels"]),
+        )  # fmt: skip
 
-        import numpy as _np
-
-        q8 = _np.full((8, 8), 8, dtype=_np.int32)
-        for pdf in it:
-            out = {
-                "doc_id": [], "width": [], "height": [],
-                "adobe_rgb_md5": [], "plain_rgb_md5": [],
-            }  # fmt: skip
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                hb = len(payload) // (4 * wb)
-                if hb == 0:
-                    continue
-                const = _np.frombuffer(
-                    bytes(payload[: hb * wb * 4]), dtype=_np.uint8
-                ).reshape(hb, wb, 4)
-                img = _np.repeat(_np.repeat(const, 8, axis=0), 8, axis=1)
-                d_adobe = dec(enc(img, quant=q8, adobe=True, restart_interval=2))
-                d_plain = dec(enc(img, quant=q8, adobe=False))
-                out["doc_id"].append(did)
-                out["width"].append(d_adobe["width"])
-                out["height"].append(d_adobe["height"])
-                out["adobe_rgb_md5"].append(
-                    _hashlib.md5(d_adobe["pixels"].hex().encode()).hexdigest()
-                )
-                out["plain_rgb_md5"].append(
-                    _hashlib.md5(d_plain["pixels"].hex().encode()).hexdigest()
-                )
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(batches, schema=JPEG_CMYK_SCHEMA)
+    return _map_payloads(_payloads(documents), JPEG_CMYK_SCHEMA, row, _jpeg)
 
 
 def decoded_jpeg_cmyk_features_oracle_sql(
@@ -1205,49 +926,26 @@ def video_mp4_samples(
     Losslessness is layout-independent, so the oracle SQL is identical;
     any base-data-offset, trun data_offset, or run-continuation mistake
     breaks the md5."""
-    from pyspark import cloudpickle as _cp
-
     from . import mp4 as _mp4
 
-    try:
-        _cp.register_pickle_by_value(_mp4)
-    except Exception:
-        pass
-    docs = documents.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
     sb = sample_bytes
     mux = _mp4.encode_mp4_fragmented if fragmented else _mp4.encode_mp4
     parse = _mp4.parse_mp4
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
+    def row(did, payload):
+        n = len(payload) // sb
+        if n == 0:
+            return None
+        b = bytes(payload[: n * sb])
+        container = mux([b[i * sb : (i + 1) * sb] for i in range(n)])
+        meta = parse(container)  # every emitted value is PARSED back
+        t = meta["tracks"][0]
+        joined = b"".join(
+            container[o : o + s] for o, s in zip(t["sample_offsets"], t["sample_sizes"])
+        )
+        return did, t["n_samples"], meta["duration"], len(joined), md5_hex(joined)
 
-        for pdf in it:
-            out = {
-                "doc_id": [], "n_samples": [], "duration": [],
-                "total_bytes": [], "samples_md5": [],
-            }  # fmt: skip
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n = len(payload) // sb
-                if n == 0:
-                    continue
-                b = bytes(payload[: n * sb])
-                container = mux([b[i * sb : (i + 1) * sb] for i in range(n)])
-                meta = parse(container)  # every emitted value is PARSED back
-                t = meta["tracks"][0]
-                joined = b"".join(
-                    container[o : o + s]
-                    for o, s in zip(t["sample_offsets"], t["sample_sizes"])
-                )
-                out["doc_id"].append(did)
-                out["n_samples"].append(t["n_samples"])
-                out["duration"].append(meta["duration"])
-                out["total_bytes"].append(len(joined))
-                out["samples_md5"].append(
-                    _hashlib.md5(joined.hex().encode()).hexdigest()
-                )
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(batches, schema=MP4_SCHEMA)
+    return _map_payloads(_payloads(documents), MP4_SCHEMA, row, _mp4)
 
 
 def video_mp4_samples_oracle_sql(
@@ -1303,53 +1001,29 @@ def video_sampling(
     Pair with ``video_sampling_oracle_sql`` built from the SAME
     parameters — the frame-window arithmetic is computed in Python at
     oracle-build time, so non-default (t0, t1, sync_every) stay paired."""
-    from pyspark import cloudpickle as _cp
-
     from . import mp4 as _mp4
 
-    try:
-        _cp.register_pickle_by_value(_mp4)
-    except Exception:
-        pass
-    docs = documents.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
     sb, ke = sample_bytes, sync_every
     lo, hi = t0, t1
     mux_p, mux_f = _mp4.encode_mp4, _mp4.encode_mp4_fragmented
     extract_sync, clip_fn = _mp4.extract_sync_samples, _mp4.extract_time_range
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
+    def row(did, payload):
+        n = len(payload) // sb
+        if n == 0:
+            return None
+        b = bytes(payload[: n * sb])
+        frames = [b[i * sb : (i + 1) * sb] for i in range(n)]
+        prog = mux_p(frames, sync_every=ke)
+        frag = mux_f(frames, samples_per_fragment=ke, sync_first_of_fragment=True)
+        keys = extract_sync(prog)
+        clip = clip_fn(prog, lo, hi, align_sync=True)
+        return (
+            did, n, len(keys), md5_hex(b"".join(keys)),
+            md5_hex(b"".join(extract_sync(frag))), len(clip), md5_hex(b"".join(clip)),
+        )  # fmt: skip
 
-        def h(parts: list[bytes]) -> str:
-            return _hashlib.md5(b"".join(parts).hex().encode()).hexdigest()
-
-        for pdf in it:
-            out = {
-                "doc_id": [], "n_samples": [], "n_sync": [], "keyframes_md5": [],
-                "keyframes_frag_md5": [], "n_clip": [], "clip_md5": [],
-            }  # fmt: skip
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n = len(payload) // sb
-                if n == 0:
-                    continue
-                b = bytes(payload[: n * sb])
-                frames = [b[i * sb : (i + 1) * sb] for i in range(n)]
-                prog = mux_p(frames, sync_every=ke)
-                frag = mux_f(
-                    frames, samples_per_fragment=ke, sync_first_of_fragment=True
-                )
-                keys = extract_sync(prog)
-                clip = clip_fn(prog, lo, hi, align_sync=True)
-                out["doc_id"].append(did)
-                out["n_samples"].append(n)
-                out["n_sync"].append(len(keys))
-                out["keyframes_md5"].append(h(keys))
-                out["keyframes_frag_md5"].append(h(extract_sync(frag)))
-                out["n_clip"].append(len(clip))
-                out["clip_md5"].append(h(clip))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(batches, schema=SAMPLING_SCHEMA)
+    return _map_payloads(_payloads(documents), SAMPLING_SCHEMA, row, _mp4)
 
 
 def video_sampling_oracle_sql(
@@ -1414,90 +1088,44 @@ AHASH_SCHEMA = "doc_id long, ahash string"
 def image_ahash(documents: DataFrame, width: int = 16) -> DataFrame:
     """Per-image 8×8 average-hash (aHash) over REAL decoded images: each
     document's bytes round-trip through the genuine BMP encoder/decoder
-    (same closure pair as ``decoded_image_features``), the decoded grayscale
-    grid is 8×8 block-pooled, and each block's bit is 1 iff its mean exceeds
-    the image mean — the classic perceptual fingerprint for image-level
-    dedup (near-identical images collide even when bytes differ).
+    (``operators/rawmedia.py``, as in ``decoded_image_features``), the
+    decoded grayscale grid is 8×8 block-pooled, and each block's bit is 1
+    iff its mean exceeds the image mean — the classic perceptual
+    fingerprint for image-level dedup (near-identical images collide even
+    when bytes differ).
 
     The pooled comparison is EXACT integer cross-multiplication
     (``block_sum·n_pixels > total_sum·block_n``) — no float means — so the
     DuckDB oracle predicts the hash independently from the source bytes.
     The 64-bit hash is emitted as 16 hex chars (two 32-bit halves;
     sign-free on every engine)."""
-    docs = documents.select(
-        "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-    )
+    enc, dec = rawmedia.encode_bmp_gray, rawmedia.decode_bmp
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def row(did, payload):
+        h = len(payload) // width
+        if h == 0:
+            return None
+        img = dec(enc(payload[: width * h], width, h))
+        w, hh = img["width"], img["height"]
+        # channel 0 of each decoded RGB pixel (R == G == B), (hh, w) top-down
+        gray = np.frombuffer(img["pixels"], np.uint8)[0::3].reshape(hh, w)
+        # 8×8 block pooling via contiguous-range reduceat: block row of
+        # pixel row y is (y*8)//hh (monotone), so cuts at value changes
+        # give exact per-block integer sums and counts
+        g64 = gray.astype(np.int64)
+        tsum, tn = int(g64.sum()), w * hh
+        yidx = (np.arange(hh) * 8) // hh
+        xidx = (np.arange(w) * 8) // w
+        ycut = np.flatnonzero(np.r_[1, np.diff(yidx)])
+        xcut = np.flatnonzero(np.r_[1, np.diff(xidx)])
+        bsum = np.add.reduceat(np.add.reduceat(g64, ycut, axis=0), xcut, axis=1)
+        bn = np.outer(np.diff(np.r_[ycut, hh]), np.diff(np.r_[xcut, w]))
+        bits = (bsum * tn) > (tsum * bn)  # exact integer cross-mult
+        shifts = (yidx[ycut][:, None] * 8 + xidx[xcut][None, :]).astype(np.uint64)
+        hv = int((bits.astype(np.uint64) << shifts).sum(dtype=np.uint64))
+        return did, f"{hv >> 32:08x}{hv & 0xFFFFFFFF:08x}"
 
-        import numpy as _np
-
-        def enc(pixels: bytes, w: int, h: int) -> bytes:
-            # same 24bpp bottom-up BMP bytes as the per-pixel original:
-            # gray tripled into BGR, rows zero-padded to 4-byte stride
-            stride = (w * 3 + 3) & ~3
-            arr = _np.frombuffer(pixels, _np.uint8).reshape(h, w)
-            rows = _np.zeros((h, stride), _np.uint8)
-            rows[:, : w * 3] = _np.repeat(arr[::-1], 3, axis=1)
-            data = rows.tobytes()
-            return (
-                _struct.pack("<2sIHHI", b"BM", 54 + len(data), 0, 0, 54)
-                + _struct.pack(
-                    "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0
-                )
-                + data
-            )
-
-        def dec_gray(payload: bytes):
-            assert payload[:2] == b"BM"
-            (off,) = _struct.unpack_from("<I", payload, 10)
-            _, w, h_raw = _struct.unpack_from("<Iii", payload, 14)
-            (bpp,) = _struct.unpack_from("<H", payload, 28)
-            h, bottom_up = abs(h_raw), h_raw > 0
-            n_ch = bpp // 8
-            stride = (w * n_ch + 3) & ~3
-            buf = _np.frombuffer(
-                payload, _np.uint8, count=h * stride, offset=off
-            ).reshape(h, stride)
-            gray = buf[:, : w * n_ch][:, ::n_ch]  # channel 0 of each px (R==G==B)
-            if bottom_up:
-                gray = gray[::-1]
-            return w, h, gray  # (h, w) top-down
-
-        for pdf in it:
-            out = {"doc_id": [], "ahash": []}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                h = len(payload) // width
-                if h == 0:
-                    continue
-                w, hh, gray = dec_gray(enc(payload[: width * h], width, h))
-                # 8×8 block pooling via contiguous-range reduceat: block row
-                # of pixel row y is (y*8)//hh (monotone), so cuts at value
-                # changes give the same per-block integer sums/counts the
-                # old per-pixel dict accumulated — all-int, bit-identical
-                g64 = gray.astype(_np.int64)
-                tsum, tn = int(g64.sum()), w * hh
-                yidx = (_np.arange(hh) * 8) // hh
-                xidx = (_np.arange(w) * 8) // w
-                ycut = _np.flatnonzero(_np.r_[1, _np.diff(yidx)])
-                xcut = _np.flatnonzero(_np.r_[1, _np.diff(xidx)])
-                bsum = _np.add.reduceat(
-                    _np.add.reduceat(g64, ycut, axis=0), xcut, axis=1
-                )
-                bn = _np.outer(
-                    _np.diff(_np.r_[ycut, hh]), _np.diff(_np.r_[xcut, w])
-                )
-                bits = (bsum * tn) > (tsum * bn)  # exact integer cross-mult
-                shifts = (
-                    yidx[ycut][:, None] * 8 + xidx[xcut][None, :]
-                ).astype(_np.uint64)
-                hv = int((bits.astype(_np.uint64) << shifts).sum(dtype=_np.uint64))
-                out["doc_id"].append(did)
-                out["ahash"].append(f"{hv >> 32:08x}{hv & 0xFFFFFFFF:08x}")
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(batches, schema=AHASH_SCHEMA)
+    return _map_payloads(_payloads(documents), AHASH_SCHEMA, row)
 
 
 def image_ahash_groups(documents: DataFrame, width: int = 16) -> DataFrame:
@@ -1674,7 +1302,7 @@ AUDIO_FP_SCHEMA = "doc_id long, n_samples int, audio_fp string"
 def audio_energy_fingerprint(documents: DataFrame, n_frames: int = 16) -> DataFrame:
     """Audio-modality fingerprint over REAL decoded audio: each document's
     bytes are wrapped as a genuine 8-bit PCM mono WAV (stdlib ``wave``
-    writer), decoded back (``decode_wav`` path — RIFF headers parsed for
+    writer), decoded back (``decode_wav`` — RIFF headers parsed for
     real), and the PCM stream is split into ``n_frames`` equal frames whose
     energy profile forms the fingerprint: frame bit = 1 iff its energy
     exceeds the clip mean (exact integer cross-multiplication — the same
@@ -1684,53 +1312,31 @@ def audio_energy_fingerprint(documents: DataFrame, n_frames: int = 16) -> DataFr
 
     Returns ``(doc_id, n_samples, audio_fp)`` with the fingerprint as
     ``n_frames/4`` hex chars; group by ``audio_fp`` for duplicate clusters.
-    Pure per-row map — no shuffle at all until the caller aggregates."""
-    docs = documents.select(
-        "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-    )
+    ``n_frames`` must be a positive multiple of 4, so that width is exact
+    on both engines. Pure per-row map — no shuffle at all until the caller
+    aggregates."""
+    if n_frames < 4 or n_frames % 4:
+        raise ValueError(f"n_frames must be a positive multiple of 4, got {n_frames}")
+    enc, dec = rawmedia.encode_wav_mono8, rawmedia.decode_wav
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-        import wave as _wave
+    def row(did, payload):
+        frame_len = len(payload) // n_frames
+        if frame_len == 0:
+            return None
+        used = payload[: frame_len * n_frames]
+        pcm = dec(enc(bytes(used)))["pcm"]  # 8-bit PCM: bytes round-trip
+        energies = [
+            sum((s - 128) * (s - 128) for s in pcm[f * frame_len : (f + 1) * frame_len])
+            for f in range(n_frames)
+        ]
+        total = sum(energies)
+        fp = 0
+        for f, e in enumerate(energies):
+            if e * n_frames > total:
+                fp |= 1 << f
+        return did, len(pcm), format(fp, f"0{n_frames // 4}x")
 
-        def enc(samples: bytes) -> bytes:
-            buf = _io.BytesIO()
-            with _wave.open(buf, "wb") as w:
-                w.setnchannels(1)
-                w.setsampwidth(1)
-                w.setframerate(8000)
-                w.writeframes(samples)
-            return buf.getvalue()
-
-        def dec(payload: bytes) -> bytes:
-            assert payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"
-            with _wave.open(_io.BytesIO(payload)) as w:
-                assert w.getnchannels() == 1 and w.getsampwidth() == 1
-                return w.readframes(w.getnframes())
-
-        for pdf in it:
-            out = {"doc_id": [], "n_samples": [], "audio_fp": []}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frame_len = len(payload) // n_frames
-                if frame_len == 0:
-                    continue
-                used = payload[: frame_len * n_frames]
-                pcm = dec(enc(bytes(used)))  # 8-bit PCM: bytes round-trip
-                energies = [
-                    sum((s - 128) * (s - 128) for s in pcm[f * frame_len : (f + 1) * frame_len])
-                    for f in range(n_frames)
-                ]
-                total = sum(energies)
-                fp = 0
-                for f, e in enumerate(energies):
-                    if e * n_frames > total:
-                        fp |= 1 << f
-                out["doc_id"].append(did)
-                out["n_samples"].append(len(pcm))
-                out["audio_fp"].append(format(fp, f"0{n_frames // 4}x"))
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(batches, schema=AUDIO_FP_SCHEMA)
+    return _map_payloads(_payloads(documents), AUDIO_FP_SCHEMA, row)
 
 
 def audio_fp_near_dup_pairs(

@@ -94,6 +94,18 @@ def _nodelay_existing(spark: SparkSession) -> None:
         pass
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical memory, capped at 16g: the driver JVM
+    grows toward its heap limit, and a 16g heap on a 16 GB machine left
+    nothing for the OS and the Python workers. ``16g`` when the physical
+    memory cannot be read."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        total = 0
+    return f"{min(16 << 10, total // 2 >> 20)}m" if total > 0 else "16g"
+
+
 def get_spark(
     app_name: str = "tesseract_spark",
     master: str | None = None,
@@ -108,7 +120,10 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+        )
         # Spark's default FIFO scheduler, measured (r11): per-request FAIR
         # pools DOUBLED the 100-client uncached steady-state p50 (0.32s ->
         # 0.65s, 134 -> 47 rps), so the engine has no FAIR mode

@@ -72,13 +72,13 @@ CODEC_BOUNDARY_PINS: dict[str, list[str]] = {
         "4-component JPEG is 8-bit only here",
     ],
     "mp4.py": ["frame-level video decode needs an H.264/H.265 codec"],
-    "multimodal.py": [
+    "rawmedia.py": [
         "BITMAPCOREHEADER",
         "compressed BMP",
         "-bit BMP unsupported",
         "16-bit PPM unsupported",
-        "payload is not a BMP/PNG/PPM/WAV/JPEG",
     ],
+    "multimodal.py": ["payload is not a BMP/PNG/PPM/WAV/JPEG"],
 }
 
 #: docstring phrases that must accompany (or must vanish with) the raises

@@ -806,6 +806,34 @@ def test_shared_tables_are_read_only():
     assert jpeg.decode_jpeg(jpeg.encode_jpeg_gray(g)) is not None
 
 
+def test_frozen_decode_table_rejects_every_mutator():
+    """Every dict mutator of a shared (frozen) decode table raises, not
+    only item assignment and deletion; a copy stays mutable through all
+    of them."""
+    tab = jpeg._build_decode(jpeg.AC_LUMA_BITS, jpeg.AC_LUMA_VALS)
+    before = dict(tab)
+    key = next(iter(tab))
+    mutators = {
+        "update": lambda t: t.update({(1 << 16) | 0: 99}),
+        "pop": lambda t: t.pop(key),
+        "popitem": lambda t: t.popitem(),
+        "clear": lambda t: t.clear(),
+        "setdefault": lambda t: t.setdefault((17 << 16) | 0, 99),
+        "__ior__": lambda t: t.__ior__({(1 << 16) | 0: 99}),
+    }
+    for name, mutate in mutators.items():
+        with pytest.raises(TypeError):
+            mutate(tab)
+        assert dict(tab) == before, name
+    with pytest.raises(TypeError):
+        tab |= {(1 << 16) | 0: 99}
+    assert dict(tab) == before
+    for name, mutate in mutators.items():
+        cp = jpeg._DecodeTable(tab)
+        mutate(cp)  # no raise
+        assert dict(cp) != before, name
+
+
 def test_huff_decode_marker_adjacent_error_parity():
     """ADVICE r16 (low): with EXACTLY 16 bits buffered before a marker and
     no ≤16-bit code matching, the per-bit walk reads a 17th bit and raises
