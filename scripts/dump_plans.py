@@ -12,10 +12,15 @@ Notes: entries whose value is produced by driver-side orchestration around
 writes (aggnav build/refresh, index builds) still dump the SERVED/returned
 frame's plan — the part a repeated dashboard query pays.
 
-Plans are written in canonical form (:func:`canonical`): expression ids and
-``plan_id=`` values are renumbered in order of first appearance, and the pid
-in per-process temp index dirs becomes ``<pid>``. Two dumps of the same plan,
-from two checkouts or two runs, then compare with a plain ``diff -r``.
+Plans are written in canonical form (:func:`canonical`): expression ids,
+``plan_id=`` values and RDD ids (the ``RDD[n]`` of checkpointed inputs, which
+count every RDD the process made before, cached snapshots included) are
+renumbered in order of first appearance; the pid in per-process temp index
+dirs becomes ``<pid>``, and the random suffix of ``tempfile.mkdtemp`` dirs
+becomes ``<rand>``. Two dumps of the same plan, from two checkouts or two
+runs, then compare with a plain ``diff -r``. Cached relations carry no
+run-dependent token (``InMemoryRelation`` prints its columns and storage
+level only).
 """
 
 from __future__ import annotations
@@ -23,6 +28,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+import tempfile
 
 
 def _renumber(prefix: str, text: str) -> str:
@@ -36,11 +42,17 @@ def _renumber(prefix: str, text: str) -> str:
     return re.sub(re.escape(prefix) + r"(\d+)", sub, text)
 
 
+#: a ``tempfile.mkdtemp(prefix=...)`` dir: its prefix, then 8 random characters
+_MKDTEMP = re.compile(re.escape(tempfile.gettempdir()) + r"/(\w+?_)\w{8}(?=[\]/,\s])")
+
+
 def canonical(plan: str, pid: int) -> str:
     """``plan`` with its run-dependent numbers made canonical."""
     plan = _renumber("#", plan)
     plan = _renumber("plan_id=", plan)
-    return re.sub(rf"(tesseract_spark_ivf_\S*?_){pid}\b", r"\1<pid>", plan)
+    plan = _renumber("RDD[", plan)
+    plan = re.sub(rf"(tesseract_spark_ivf_\S*?_){pid}\b", r"\1<pid>", plan)
+    return _MKDTEMP.sub(rf"{tempfile.gettempdir()}/\1<rand>", plan)
 
 
 def main() -> int:

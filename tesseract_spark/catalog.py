@@ -780,7 +780,7 @@ def _members_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     b = get_builder(spark, sf_dir)
-    dim = b.registry.load("order_geo")
+    dim = b.registry.dim("order_geo")
     return (
         dim.select(
             F.col("n_nationkey").alias("ID"), F.col("n_name").alias("Label")

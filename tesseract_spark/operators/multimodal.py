@@ -445,11 +445,13 @@ def resize_payload_grid(df: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFr
 
     def row(did, payload):
         side = math.isqrt(len(payload))
+        # an empty payload has no pixels: the oracle's substr reads "" for
+        # every index, so its hash is that of the empty string
         px = bytes(
             payload[(i * side // out_h) * side + (j * side // out_w)]
             for i in range(out_h)
             for j in range(out_w)
-        )
+        ) if side else b""
         return did, side, out_w, out_h, md5_hex(px)
 
     return _map_payloads(df, RESIZE_SCHEMA, row)

@@ -10,7 +10,10 @@ Plan shape, scale-first:
 - default: cuts → filters/semi-joins on the fact scan, broadcast inner joins to
   dimension tables, ONE ``groupBy`` at drill grain. With broadcast dims this is a
   single shuffle; partial (map-side) aggregation is Catalyst's HashAggregate
-  partial→final.
+  partial→final. Dimension tables come from ``_dim_df``: a computed view
+  (the ``order_geo`` snowflake) is joined from its registry snapshot, cached
+  by Spark on first scan and dropped when the registry generation moves
+  (``/flush``); cut key sets read the view's own plan, for pushdown.
 - two-phase mode (``basic_grouped_median`` present, or ``avg_grain="fk"``
   reference-parity): explicit pre-aggregation at fact/foreign-key grain before
   the dim joins, mirroring the reference plan (primary_agg.rs:93-121, 162-167,
@@ -270,12 +273,20 @@ class PlanBuilder:
             return df
         return F.broadcast(df)
 
-    def _dim_df(self, hier: Hierarchy) -> DataFrame:
+    def _dim_df(self, hier: Hierarchy, snapshot: bool = True) -> DataFrame:
+        """A hierarchy's table — the one entry point for dimension tables
+        (dim joins, cut key sets, member lists, diagnosis): inline rows, or
+        the registry's :meth:`~TableRegistry.dim`, which serves a computed
+        view as its per-generation snapshot. ``snapshot=False`` reads the
+        view's own plan instead (:meth:`~TableRegistry.load`): cut key sets
+        do, so Catalyst pushes the cut into the view's scans."""
         if hier.inline_table is not None:
             return self.registry.inline_table(hier.inline_table)
         if hier.table is None:
             raise QueryValidationError(f"hierarchy {hier.name!r} is degenerate")
-        return self.registry.load(hier.table)
+        if not snapshot:
+            return self.registry.load(hier.table)
+        return self.registry.dim(hier.table)
 
     # ---------------- cuts ----------------
 
@@ -344,7 +355,9 @@ class PlanBuilder:
         if not cut.members:
             # memberless default-hierarchy cut: unconditional dedup against
             # the hierarchy table (primary_agg.rs:139-146)
-            return self._dim_df(ref.hier).select(F.col(pk).alias(_CUT_KEY))
+            return self._dim_df(ref.hier, snapshot=False).select(
+                F.col(pk).alias(_CUT_KEY)
+            )
         if not cut.for_match and ref.level.key_column == pk:
             # cut on the join key itself: skip the dim scan, filter the fact fk
             # directly (generalizes the reference's fact-table cut inlining,
@@ -352,7 +365,7 @@ class PlanBuilder:
             return self._cut_predicate(ref.level, cut, fk)
         # fk IN (SELECT pk FROM dim WHERE cut)
         return (
-            self._dim_df(ref.hier)
+            self._dim_df(ref.hier, snapshot=False)
             .filter(
                 self._cut_predicate(
                     ref.level, cut, ref.level.key_column, ref.level.name_column

@@ -13,9 +13,12 @@ Inline tables (schema.rs:441-486) become ``spark.createDataFrame`` with types
 from their column definitions — the Spark analog of the reference's
 ``SELECT … UNION ALL`` literal codegen.
 
-Scale note: dimension tables are accessed through :meth:`dim` which does NOT
-cache/collect — broadcast hints are applied by the plan builder at join sites so
-Catalyst can still pick sort-merge if a "dimension" turns out huge.
+Scale note: dimension tables are read through :meth:`TableRegistry.dim`. It
+never collects; it only snapshots computed views — ``cache()`` once per
+registry generation, evictable, unpersisted by ``refresh_files()`` — so a
+snowflake dimension's joins run once instead of per request. Broadcast hints
+are applied by the plan builder at join sites so Catalyst can still pick
+sort-merge if a "dimension" turns out huge.
 """
 
 from __future__ import annotations
@@ -106,6 +109,8 @@ class TableRegistry:
     def __init__(self, spark: SparkSession, base_dir: str | None = None):
         self.spark = spark
         self.base_dir = base_dir
+        #: registered tables: DataFrames, and callables that define a view
+        #: (or a JDBC read) and are built by load()
         self._views: dict[str, DataFrame | Callable[[SparkSession], DataFrame]] = {}
         self._no_broadcast: set[str] = set()
         #: bumped on every (re-)registration; consumers that cache plans
@@ -113,18 +118,26 @@ class TableRegistry:
         #: on it so a swapped frame invalidates everything built on the old
         #: one (the aggnav hist/fact swap would otherwise serve stale plans)
         self.generation = 0
-        #: names whose _views entry came from the parquet fallback (load()
-        #: memoization) rather than an explicit register() — the set
-        #: refresh_files() may safely drop
-        self._parquet_memo: set[str] = set()
-        #: guards _views/_parquet_memo/_no_broadcast/generation: the server
-        #: handles /flush (refresh_files) concurrently with GETs whose
-        #: load() calls mutate _parquet_memo — unsynchronized, iteration in
-        #: refresh_files() can see "set changed size during iteration"
-        #: (ADVICE r11). Same race class memo.Lru locks against for the
-        #: plan builder's caches. Never held across a Spark action — only
-        #: around dict/set bookkeeping — so there is no deadlock surface.
+        #: what load() built this generation — callable views and parquet
+        #: fallback reads, as PLANS (not data). refresh_files() drops them all
+        self._built: dict[str, DataFrame] = {}
+        #: names registered as a callable computed view (not JDBC): dim()
+        #: snapshots these
+        self._computed: set[str] = set()
+        #: name -> the cached frame dim() serves for a computed view
+        self._snapshots: dict[str, DataFrame] = {}
+        #: guards every dict/set above and generation: the server handles
+        #: /flush (refresh_files) concurrently with GETs whose load()/dim()
+        #: calls fill _built/_snapshots (ADVICE r11). Never held across a
+        #: py4j call — only around bookkeeping — so there is no deadlock
+        #: surface.
         self._lock = threading.Lock()
+        #: serializes this registry's cache() and unpersist() calls. Spark
+        #: races an uncache against a concurrent cache of the same plan:
+        #: the uncache's recache pass can re-add the entry the cache just
+        #: added, after its owner unpersisted it, and nothing drops it then
+        #: (seen under threads racing dim() against refresh_files()).
+        self._cache_lock = threading.Lock()
 
     def register(
         self,
@@ -132,13 +145,29 @@ class TableRegistry:
         df: DataFrame | Callable[[SparkSession], DataFrame],
         broadcastable: bool = True,
     ):
-        """``broadcastable=False`` marks a table that scales with the fact
+        """Bind ``name`` to a DataFrame, or to a callable that builds one (a
+        computed view, served by :meth:`dim` as a per-generation snapshot).
+        ``broadcastable=False`` marks a table that scales with the fact
         (e.g. an order-grain denormalized dim): the plan builder then omits the
         broadcast hint and lets AQE pick broadcast vs shuffle at runtime."""
+        return self._bind(name, df, broadcastable, computed=callable(df))
+
+    def _bind(
+        self,
+        name: str,
+        df: DataFrame | Callable[[SparkSession], DataFrame],
+        broadcastable: bool,
+        computed: bool,
+    ):
         with self._lock:
             self._views[name] = df
-            self._parquet_memo.discard(name)  # explicit registration takes over
+            self._built.pop(name, None)  # explicit registration takes over
+            stale = self._snapshots.pop(name, None)
             self.generation += 1
+            if computed:
+                self._computed.add(name)
+            else:
+                self._computed.discard(name)
             if not broadcastable:
                 self._no_broadcast.add(name)
             else:
@@ -146,6 +175,8 @@ class TableRegistry:
                 # sticky _no_broadcast entry survived a broadcastable=True
                 # re-register, leaking swap-and-restore state)
                 self._no_broadcast.discard(name)
+        if stale is not None:
+            self._unpersist([stale])
         return self
 
     def is_broadcastable(self, name: str) -> bool:
@@ -188,7 +219,9 @@ class TableRegistry:
                 )
             return reader.load()
 
-        return self.register(name, load_jdbc, broadcastable=broadcastable)
+        # a JDBC read is one scan already: load() builds it, dim() never
+        # snapshots it
+        return self._bind(name, load_jdbc, broadcastable, computed=False)
 
     def register_database(
         self,
@@ -211,68 +244,99 @@ class TableRegistry:
         return display
 
     def load(self, table: Table | str) -> DataFrame:
+        """The plan of a table: a registered DataFrame as given; a callable
+        view or the ``{base_dir}/{name}.parquet`` fallback built once per
+        generation and memoized as a PLAN (not data) — so row values stay
+        fresh per job, and ``spark.read.parquet``'s driver-side schema round
+        trip is not paid per request; else ``spark.table(name)``. A built
+        plan pins its file listing: a dataset rewritten underneath a
+        long-lived process (compaction, fixture regeneration) needs
+        :meth:`refresh_files` — the server's ``/flush`` calls it."""
         name = table.full_name() if isinstance(table, Table) else table
         with self._lock:
             view = self._views.get(name)
-        if view is not None:
-            if callable(view):
-                built = view(self.spark)  # plan build only — outside the lock
-                with self._lock:
-                    # memoize plan (not data); skip if a concurrent
-                    # register() swapped the entry while we were building
-                    if self._views.get(name) is view:
-                        self._views[name] = built
-                return built
+            built = self._built.get(name)
+            # snapshot the generation BEFORE building: a register() or
+            # refresh_files() landing mid-build must not be undone by
+            # memoizing the pre-bump build (review r12 #3)
+            gen = self.generation
+        if built is not None:
+            return built
+        if isinstance(view, DataFrame):
             return view
-        if self.base_dir is not None:
-            # snapshot the generation BEFORE the read: the file listing is
-            # captured outside the lock, and a refresh_files() landing
-            # between the read and the memoization below would otherwise be
-            # undone by re-memoizing the PRE-flush listing (review r12 #3)
-            gen_before = self.generation
+        if view is not None:
+            built = view(self.spark)  # plan build only — outside the lock
+        elif self.base_dir is not None:
             try:
-                df = self.spark.read.parquet(f"{self.base_dir}/{name}.parquet")
+                built = self.spark.read.parquet(f"{self.base_dir}/{name}.parquet")
             except Exception:
-                pass
-            else:
-                # memoize the PLAN (not data): spark.read.parquet pays a
-                # driver-side schema-inference round trip per call, which
-                # under 100 concurrent HTTP requests serializes on the
-                # GIL/py4j. The DataFrame object is an immutable logical
-                # plan — reusing it re-executes the scan per job, so row
-                # VALUES stay fresh. generation is NOT bumped: the memo
-                # resolves to identical content. Caveat (r11 review): the
-                # plan pins the FILE LISTING — if the dataset directory is
-                # rewritten underneath a long-lived process
-                # (compact_partitions, fixture regeneration), call
-                # refresh_files(); the server's /flush does.
-                with self._lock:
-                    # an explicit register() may have raced in — keep it;
-                    # a refresh_files() (generation bump) may have raced in
-                    # — serve this result but do NOT memoize the stale
-                    # pre-flush file listing
-                    if name not in self._views:
-                        if self.generation == gen_before:
-                            self._views[name] = df
-                            self._parquet_memo.add(name)
-                        return df
-                    memo = self._views[name]
-                return memo if isinstance(memo, DataFrame) else self.load(name)
-        return self.spark.table(name)
+                return self.spark.table(name)
+        else:
+            return self.spark.table(name)
+        with self._lock:
+            if self.generation == gen:
+                return self._built.setdefault(name, built)
+        return built  # served once, not memoized: a bump raced the build
+
+    def dim(self, table: Table | str) -> DataFrame:
+        """A table read as a DIMENSION. A computed view (a callable passed
+        to :meth:`register`) is snapshotted: its first call in a generation
+        ``cache()``-s the built view — lazily, no Spark job runs here — so
+        the first query to scan it fills Spark's block manager
+        (MEMORY_AND_DISK, evictable) and every later query in the
+        generation reads the cached columns instead of re-running the
+        view's joins. :meth:`refresh_files` and re-registering the name
+        unpersist the snapshot. Parquet, JDBC and DataFrame-registered
+        tables are single scans already and come from :meth:`load`; fact
+        reads always use :meth:`load`, so a fact view is never copied, and
+        so do cut key sets, which need the view's scans to push into.
+        Spark keys its cache by plan, so registries over the same files
+        share one cached copy (unpersisting it costs a recompute only)."""
+        name = table.full_name() if isinstance(table, Table) else table
+        with self._lock:
+            snap = self._snapshots.get(name)
+            computed = name in self._computed
+            gen = self.generation
+        if snap is not None:
+            return snap
+        if not computed:
+            return self.load(name)
+        # cache the view under an always-true filter, not as its own plan:
+        # Spark substitutes a cached plan wherever it (or a projection of
+        # it) recurs, and only dim() reads should get the snapshot. A read
+        # of the view itself — a cut's key set, a fact read — keeps its
+        # scans and the predicates Catalyst pushes into them.
+        view = self.load(name)
+        with self._cache_lock:
+            snap = view.filter(F.lit(True)).cache()
+        with self._lock:
+            if self.generation == gen:
+                return self._snapshots.setdefault(name, snap)
+        # a bump raced the build: serve the plan once, keep no cache of it
+        self._unpersist([snap])
+        return snap
+
+    def _unpersist(self, snapshots: list[DataFrame]) -> None:
+        with self._cache_lock:
+            for snap in snapshots:
+                snap.unpersist(blocking=False)
 
     def refresh_files(self) -> None:
-        """Drop every parquet-memoized plan and bump the generation so
-        downstream plan caches rebuild: the memoized DataFrames pin their
-        file listing at first read, so a dataset rewritten on disk
-        (compaction, reload) would otherwise raise FileNotFoundException —
-        or silently miss appended files — until process restart. Explicitly
-        ``register()``-ed frames are NOT touched (their owner controls
+        """Start a new generation: drop every plan :meth:`load` built
+        (parquet reads and callable views, which pin their file listing at
+        first build) and unpersist every :meth:`dim` snapshot, so the next
+        query re-reads the dataset as it is on disk now — a rewrite
+        (compaction, reload) would otherwise raise FileNotFoundException,
+        or silently miss appended files, until process restart. The
+        generation bump makes downstream plan caches rebuild. Frames
+        registered as DataFrames are NOT touched (their owner controls
         their lifecycle). Wired into the server's ``GET /flush``."""
         with self._lock:
-            for name in tuple(self._parquet_memo):
-                self._views.pop(name, None)
-            self._parquet_memo.clear()
+            self._built.clear()
+            stale = list(self._snapshots.values())
+            self._snapshots.clear()
             self.generation += 1
+        self._unpersist(stale)
 
     def inline_table(self, inline: InlineTable) -> DataFrame:
         """InlineTable rows → typed DataFrame (reference codegen: schema.rs:450-485)."""
@@ -312,9 +376,15 @@ def testdata_registry(spark: SparkSession, sf_dir: str) -> TableRegistry:
     - ``lineitem_enriched``: lineitem + derived ``l_shipyear``/``l_shipmonth``
       degenerate time levels (driver's columns for the Ship Year / Ship Month dims)
     - ``order_geo``: denormalized customer-geography dimension keyed by
-      ``o_orderkey`` (snowflake orders→customer→nation→region flattened once,
-      so the cube sees a single dimension table; at scale this is a
-      dim-side-only join of three small tables — broadcast all the way)
+      ``o_orderkey`` (snowflake orders→customer→nation→region, so the cube
+      sees a single dimension table; at scale this is a dim-side-only join
+      of three small tables — broadcast all the way). It is a computed view,
+      so :meth:`TableRegistry.dim` serves it as a snapshot: flattened once
+      per registry generation, on the first query that scans it, and
+      rebuilt after ``refresh_files()``.
+
+    Both views are callables, so ``refresh_files()`` rebuilds them over the
+    files on disk at their next :meth:`TableRegistry.load`.
     """
     reg = TableRegistry(spark, sf_dir)
 

@@ -89,6 +89,20 @@ def test_audio_fingerprint_rejects_widths_not_multiple_of_4(spark, n_frames):
         mm.audio_energy_fingerprint(docs, n_frames=n_frames)
 
 
+def test_resize_empty_payload_matches_oracle(spark):
+    """An empty document has side 0 and no pixels: the entry must emit the
+    oracle's row (the md5 of the empty string), not fail the task."""
+    import duckdb
+
+    docs = spark.createDataFrame([(7, "")], "doc_id long, text string")
+    got = [tuple(r) for r in mm.resize_payload_grid(mm.attach_binary_payload(docs)).collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents AS SELECT 7::BIGINT AS doc_id, '' AS text")
+    want = con.execute(mm.resize_payload_grid_oracle_sql()).fetchall()
+    con.close()
+    assert got == want == [(7, 0, 8, 8, "d41d8cd98f00b204e9800998ecf8427e")]
+
+
 class _CaptureMap:
     """Stands in for a DataFrame: keeps the function handed to mapInPandas."""
 
