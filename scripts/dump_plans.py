@@ -16,8 +16,10 @@ Plans are written in canonical form (:func:`canonical`): expression ids,
 ``plan_id=`` values and RDD ids (the ``RDD[n]`` of checkpointed inputs, which
 count every RDD the process made before, cached snapshots included) are
 renumbered in order of first appearance; the pid in per-process temp index
-dirs becomes ``<pid>``, and the random suffix of ``tempfile.mkdtemp`` dirs
-becomes ``<rand>``. Two dumps of the same plan, from two checkouts or two
+dirs becomes ``<pid>``, the random suffix of ``tempfile.mkdtemp`` dirs
+becomes ``<rand>``, and the session's warehouse dir (``spark-warehouse``
+under the working directory, which saved tables such as the bucketed join
+entry's read from) becomes ``<warehouse>``. Two dumps of the same plan, from two checkouts or two
 runs, then compare with a plain ``diff -r``. Cached relations carry no
 run-dependent token (``InMemoryRelation`` prints its columns and storage
 level only).
@@ -29,6 +31,7 @@ import os
 import re
 import sys
 import tempfile
+from urllib.parse import urlparse
 
 
 def _renumber(prefix: str, text: str) -> str:
@@ -46,8 +49,9 @@ def _renumber(prefix: str, text: str) -> str:
 _MKDTEMP = re.compile(re.escape(tempfile.gettempdir()) + r"/(\w+?_)\w{8}(?=[\]/,\s])")
 
 
-def canonical(plan: str, pid: int) -> str:
-    """``plan`` with its run-dependent numbers made canonical."""
+def canonical(plan: str, pid: int, warehouse: str) -> str:
+    """``plan`` with its run-dependent numbers and paths made canonical."""
+    plan = plan.replace(warehouse, "<warehouse>")
     plan = _renumber("#", plan)
     plan = _renumber("plan_id=", plan)
     plan = _renumber("RDD[", plan)
@@ -76,6 +80,7 @@ def main() -> int:
         names = [n for n in bench.HEADLINE if n in catalog.ENTRIES]
 
     spark = get_spark("tesseract_spark_plan_dump")
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     failures = []
     for name in names:
         try:
@@ -83,7 +88,7 @@ def main() -> int:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            plan = canonical(plan, os.getpid())
+            plan = canonical(plan, os.getpid(), warehouse)
         except Exception as e:  # noqa: BLE001 — dump the rest regardless
             failures.append(name)
             plan = f"ERROR: {type(e).__name__}: {e}"

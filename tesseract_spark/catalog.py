@@ -4482,8 +4482,9 @@ DRIVER_WINDOW: list[str] = [
     "q_probe_sum_bigint",
     "q_probe_events_ts",
     "q_probe_duck_version",
-    # permanent anchors (single-pass template-path re-proof; q_growth_year
-    # also re-proves the scalar global carry under the offset parameter)
+    # permanent anchors (single-pass template-path re-proof; q_growth_year,
+    # a time-only drill, also re-proves growth's global lag carry: the
+    # range-partitioned lag plus each partition's carried trailing-N array)
     "q_growth_year",
     "q_agg_year",
     # r11 cohort (ALL 45 entries whose newest driver green is r11 after the

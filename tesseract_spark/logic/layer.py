@@ -71,7 +71,8 @@ class LogicLayer:
         # measures), everything else falls through to the builder — the
         # navigator's own dataframe() does the routing
         self.navigator = navigator
-        self._caches: dict[str, MemberCache] = {}
+        #: cube name → (registry generation, its member cache)
+        self._caches: dict[str, tuple[int, MemberCache]] = {}
 
     def _engine_dataframe(self, cube_name: str, q: Query):
         if self.navigator is not None:
@@ -94,9 +95,14 @@ class LogicLayer:
         return out
 
     def cache(self, cube: Cube) -> MemberCache:
-        if cube.name not in self._caches:
-            self._caches[cube.name] = MemberCache(self.builder, cube)
-        return self._caches[cube.name]
+        """The cube's member cache, rebuilt when the registry generation
+        has moved (a ``register`` or ``refresh_files``), so member lists
+        and ``latest`` follow the data."""
+        gen = self.builder.registry.generation
+        entry = self._caches.get(cube.name)
+        if entry is None or entry[0] != gen:
+            entry = self._caches[cube.name] = (gen, MemberCache(self.builder, cube))
+        return entry[1]
 
     # ---------------- cut resolution ----------------
 

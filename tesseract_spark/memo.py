@@ -59,6 +59,13 @@ class Lru:
         with self._lock:
             self._data.clear()
 
+    def drop_where(self, stale) -> None:
+        """Remove every entry whose key satisfies ``stale(key)``; like
+        ``clear``, it keeps the counters."""
+        with self._lock:
+            for key in [k for k in self._data if stale(k)]:
+                del self._data[key]
+
     def __len__(self) -> int:
         return len(self._data)
 

@@ -37,15 +37,38 @@ Scale: the build is one train + one assignment pass + one partitioned write
 (a shuffle on ``cid`` to form directories); each query touches ``nprobe``
 lists ≈ ``nprobe/n_centroids`` of the corpus. Raising ``n_centroids``
 shrinks the probed fraction — standard IVF tuning.
+
+The IVF-PQ index (second half of the module) adds product-quantization
+codes to the lists. Both index kinds train, assign, encode and pick probes
+through the one quantization kernel in :mod:`.vq`: the coarse quantizer is
+``train_kmeans``'s one-group case, and the IVF-PQ build trains it beside
+the ``m`` PQ subspaces as one more group.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import local_df
+from .pq import (
+    _adc_candidates,
+    _adc_candidates_residual,
+    _encode_residual,
+    _residual_frame,
+    _subspace_groups,
+)
 from .similarity import _assign, cosine_col, train_kmeans
+from .vq import (
+    _codebook,
+    _codeword_rows,
+    _encode_grouped,
+    _query_sq_dists,
+    _seed_rows,
+    _slice_argmin,
+    _train_grouped_mats,
+)
 
 # id_index bucket count: the bucket function must be computable in plain
 # Python (the driver folds query-id buckets into literal partition filters),
@@ -58,7 +81,7 @@ N_ID_BUCKETS = 64
 import collections as _collections
 
 #: driver-derived residual seed row — duck-types the ``(cid, cvec)`` Rows
-#: _grouped_mats_from_seeds reads (r17: one TakeOrdered serves both the
+#: the trainer's ``seed_rows`` takes (one TakeOrdered serves both the
 #: coarse and residual trainings' seeds)
 _ResidSeed = _collections.namedtuple("_ResidSeed", ["cid", "cvec"])
 
@@ -176,14 +199,8 @@ def _driver_probes(crows, Q, qids, nprobe: int):
     probed sets are bit-identical. Replaces a crossJoin+window+collect job
     (~0.5 s of scheduling per serve) with O(queries × centroids × dim)
     driver flops on already-driver-resident data."""
-    import numpy as np
-
-    cids = np.array([int(r.cid) for r in crows], dtype=np.int64)
-    C = np.array([list(r.cvec) for r in crows], dtype=np.float64)
-    css = np.cumsum(C * C, axis=1)[:, -1]
-    qss = np.cumsum(Q * Q, axis=1)[:, -1]
-    dot = np.cumsum(Q[:, None, :] * C[None, :, :], axis=2)[:, :, -1]
-    dist = qss[:, None] - 2.0 * dot + css[None, :]
+    mat = _codebook((r.cid, r.cvec) for r in crows)
+    cids, dist = mat[0], _query_sq_dists(Q, mat)
     out: dict[int, list[int]] = {}
     for qi in range(len(qids)):
         order = np.lexsort((cids, dist[qi]))[:nprobe]
@@ -254,8 +271,6 @@ def query_ivf_index(
     The probed-list scan is partition-pruned via a literal ``cid IN``
     predicate derived from the collected probe set (≤ ``n_centroids``
     values — bounded metadata)."""
-    import numpy as np
-
     # step 1: pruned read of the (id, cid) map — which list holds each query
     q_buckets = sorted({int(q) % N_ID_BUCKETS for q in query_ids})
     home_cids = sorted(
@@ -378,8 +393,6 @@ def query_ivf_index_with_vectors(
     driver-resident and the centroid table is bounded index metadata, so
     the former crossJoin+window+collect job chain is pure scheduling
     overhead — :func:`_driver_probes` reproduces its ordering bit-exactly."""
-    import numpy as np
-
     crows = _meta_read(spark, f"{path}/centroids")
     qv = [(int(i), [float(x) for x in v]) for i, v in query_vectors]
     if not qv or not crows:
@@ -428,11 +441,12 @@ def pruned_lists_scan(spark: SparkSession, path: str, cids: list[int]) -> DataFr
 # scan's ReadSchema has no vec column). Exact rescore then reads the vec
 # column of the SAME probed directories for just the candidate ids.
 #
-# PQ here encodes RAW vectors, not residuals (vec - coarse centroid): raw
-# encoding reuses the proven per-subspace codebook oracle unchanged, at
+# By default PQ encodes RAW vectors, not residuals (vec - coarse centroid):
+# raw encoding reuses the proven per-subspace codebook oracle unchanged, at
 # some recall cost vs the classic residual refinement — the rescore stage
 # absorbs the difference for the oracle contract (exactness limit: rerank
-# >= list size degrades to IVF-exact).
+# >= list size degrades to IVF-exact). ``residual=True`` builds the IVFADC
+# form.
 
 
 def _read_ivfpq_meta(spark: SparkSession, path: str) -> bool:
@@ -477,12 +491,13 @@ def build_ivfpq_index(
       ``(j, cid, cvec)`` — both bounded metadata.
 
     ONE grouped fused training (the coarse quantizer rides
-    :func:`~.pq._train_grouped_mats` as one more group beside the m
+    :func:`~.vq._train_grouped_mats` as one more group beside the m
     subspaces — 1 probe + 1 seed collect + 1 assign pass + 1 means shuffle
     for everything), then ONE encode pass emitting coarse cid + PQ codes
     together, then one partitioned write. Bit-equal to training the pieces
-    independently (train_kmeans parity asserted by the rerank-limit test
-    against ``build_ivf_index``).
+    independently: the coarse group is ``train_kmeans``'s own one-group
+    case, and each subspace equals ``train_kmeans`` on its slice
+    (``tests/test_vq.py``).
 
     ``residual=True`` builds the IVFADC form (Jégou et al. TPAMI 2011 §IV):
     the PQ codebooks train on and encode ``v − coarse_centroid(v)`` instead
@@ -497,13 +512,6 @@ def build_ivfpq_index(
     single encode pass (coarse argmin + subtraction + subspace argmins all
     ride one Arrow batch). Serving reads the ``{path}/meta`` flag and
     switches the ADC lookup tables to per-(query, probed list) residuals."""
-    from .pq import (
-        _encode_grouped,
-        _encode_residual,
-        _residual_frame,
-        _train_grouped_mats,
-    )
-
     vecs = df.select(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
@@ -513,12 +521,8 @@ def build_ivfpq_index(
     sd = dim // m
     spark = df.sparkSession
 
-    pq_groups = [(j * sd + 1, sd, n_codes) for j in range(m)]
+    pq_groups = _subspace_groups(m, sd, n_codes)
     if residual:
-        import numpy as _np
-
-        from .pq import _slice_argmin
-
         # One TakeOrdered job serves BOTH trainings' seeds, and the residual
         # trainer's limit-probe runs on the raw non-null base rows instead
         # of the residual mapInPandas view (r17): the residual frame maps
@@ -529,12 +533,7 @@ def build_ivfpq_index(
         # kernel the residual frame applies per batch (_slice_argmin +
         # C[win] subtraction — row-independent, so bit-identical).
         src_nn = vecs.where(F.col("vec").isNotNull())
-        base_seeds = (
-            src_nn.orderBy("id")
-            .limit(max(n_centroids, n_codes))
-            .select(F.col("id").alias("cid"), F.col("vec").alias("cvec"))
-            .collect()
-        )
+        base_seeds = _seed_rows(vecs, max(n_centroids, n_codes))
         coarse_mat = _train_grouped_mats(
             vecs,
             [(1, dim, n_centroids)],
@@ -543,7 +542,7 @@ def build_ivfpq_index(
             seed_rows=base_seeds,
         )[0]
         if base_seeds and len(coarse_mat[0]):
-            V = _np.array([list(r.cvec) for r in base_seeds], dtype=_np.float64)
+            V = np.array([list(r.cvec) for r in base_seeds], dtype=np.float64)
             _, win = _slice_argmin(V, coarse_mat)
             R = V - coarse_mat[1][win]
             resid_seeds = [
@@ -618,17 +617,12 @@ def build_ivfpq_index(
         _meta_write(
             spark,
             f"{target}/centroids",
-            [
-                (int(c), [float(x) for x in row])
-                for c, row in zip(coarse_mat[0], coarse_mat[1])
-            ],
+            _codeword_rows(coarse_mat),
             "cid bigint, cvec array<double>",
             mode,
         )
         books = [
-            (int(j), int(c), [float(x) for x in row])
-            for j, (cids, C, _) in enumerate(pq_mats)
-            for c, row in zip(cids, C)
+            (j, *row) for j, mat in enumerate(pq_mats) for row in _codeword_rows(mat)
         ]
         _meta_write(
             spark,
@@ -664,10 +658,6 @@ def append_to_ivfpq_index(
     codebooks (tested). Residual (IVFADC) indexes encode the batch's
     residuals against the frozen coarse centroids — the ``meta`` flag picks
     the path."""
-    import numpy as np
-
-    from .pq import _encode_grouped, _encode_residual
-
     spark = df.sparkSession
     crows = sorted(_meta_read(spark, f"{path}/centroids"), key=lambda r: r.cid)
     brows = sorted(
@@ -685,24 +675,17 @@ def append_to_ivfpq_index(
     dim = len(crows[0].cvec)
     sd = dim // m
 
-    def _mat(rows):
-        cids = np.array([r.cid for r in rows], dtype=np.int64)
-        C = np.array([list(r.cvec) for r in rows], dtype=np.float64)
-        return (cids, C, np.cumsum(C * C, axis=1)[:, -1])
-
+    coarse_mat = _codebook((r.cid, r.cvec) for r in crows)
+    pq_mats = [_codebook((r.cid, r.cvec) for r in brows if r.j == j) for j in range(m)]
     vecs = df.select(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
     )
     if _read_ivfpq_meta(spark, path):
-        pq_mats = [_mat([r for r in brows if r.j == j]) for j in range(m)]
-        out = _encode_residual(vecs, _mat(crows), pq_mats, sd, keep_vec=True)
+        out = _encode_residual(vecs, coarse_mat, pq_mats, sd, keep_vec=True)
     else:
-        mats = [_mat(crows)] + [
-            _mat([r for r in brows if r.j == j]) for j in range(m)
-        ]
-        groups = [(1, dim, 0)] + [(j * sd + 1, sd, 0) for j in range(m)]
-        enc = _encode_grouped(vecs, mats, groups, keep_vec=True)
+        groups = [(1, dim, 0)] + _subspace_groups(m, sd)
+        enc = _encode_grouped(vecs, [coarse_mat] + pq_mats, groups, keep_vec=True)
         out = enc.select(
             "id",
             "vec",
@@ -742,10 +725,6 @@ def query_ivfpq_index(
     semi-join shuffles only the PROBED lists' ``(id, codes, cid)`` columns
     against the filter frame — AQE broadcasts selective filters; the raw
     vec columns and unprobed lists never move."""
-    import numpy as np
-
-    from .pq import _adc_candidates, _adc_candidates_residual
-
     # centroids/codebooks/meta are bounded index metadata and the query
     # batch is already driver-resident — probe selection runs on the driver
     # (bit-exact: _driver_probes), removing the former crossJoin+window
@@ -794,12 +773,7 @@ def query_ivfpq_index(
             ),
         )
     m = 1 + max(r.j for r in brows)
-    mats = []
-    for j in range(m):
-        sub = [r for r in brows if r.j == j]
-        cids = np.array([r.cid for r in sub], dtype=np.int64)
-        C = np.array([list(r.cvec) for r in sub], dtype=np.float64)
-        mats.append((cids, C, np.cumsum(C * C, axis=1)[:, -1]))
+    mats = [_codebook((r.cid, r.cvec) for r in brows if r.j == j) for j in range(m)]
     dim = Q.shape[1]
     sd = dim // m
 

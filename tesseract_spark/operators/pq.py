@@ -11,13 +11,16 @@ of exact subspace distances, summed per stored code tuple.
 
 Scale shape (every stage linear, corpus never shuffles):
 
-- **Codebooks**: ``m`` × :func:`~.similarity.train_kmeans` (deterministic
-  seeding, exact decimal means, hash-bucket-capped training sample), each
-  collected once — ``n_codes × d`` doubles total, a bounded driver table.
-- **Encode**: ONE ``mapInPandas`` pass over the corpus; per Arrow batch and
-  subspace, one BLAS matmul + the margin-banded exact-fold argmin (the
-  :func:`~.similarity._assign` method, bit-identical tie-breaks). No join,
-  no shuffle, no row expansion.
+- **Codebooks**: the ``m`` subspaces train as ``m`` groups of the shared
+  Lloyd trainer, :func:`~.vq._train_grouped_mats` (deterministic seeding,
+  exact decimal means, hash-bucket-capped training sample). Subspace ``j``'s
+  codebook is bit-equal to :func:`~.similarity.train_kmeans` on that slice
+  (``tests/test_vq.py``): ``n_codes × d`` doubles total, a bounded driver
+  table.
+- **Encode**: ONE ``mapInPandas`` pass over the corpus
+  (:func:`~.vq._encode_grouped`); per Arrow batch and subspace, one BLAS
+  matmul + the margin-banded exact-fold argmin that ``similarity._assign``
+  also runs. No join, no shuffle, no row expansion.
 - **ADC scan**: ONE linear pass over the CODES table (Arrow moves ``m``
   longs per row, not ``d`` doubles); per batch each query keeps only its
   top-``rerank`` partial by ``(adc, id)``, so the global rank window sees
@@ -41,226 +44,20 @@ IVF (partition-pruned lists), int8 (4× scan), PQ (16-64× scan).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .similarity import _sql_assign, _sql_kmeans_ctes, cosine_col
-
-
-def _train_grouped_mats(
-    vecs: DataFrame,
-    groups: list[tuple[int, int, int]],
-    iters: int,
-    train_max_rows: int | None,
-    probe_frame: DataFrame | None = None,
-    seed_rows: list | None = None,
-):
-    """Deterministic Lloyd k-means over several VIEWS of the same vectors in
-    ONE fused pipeline. ``groups``: ``[(start, width, k), ...]`` — each
-    group trains a ``k``-codeword codebook on ``vec[start : start+width-1]``
-    (1-based, inclusive), bit-equal to an independent
-    :func:`~.similarity.train_kmeans` run on that slice (asserted by test),
-    because every group shares the same structure: seeds are the group's
-    ``k`` smallest-id non-null rows (slices of the SAME rows — one collect
-    of ``max(k)`` rows serves all groups), the sampling probe/filter is
-    id-hash-based (vector-independent), assignment is the margin-banded
-    exact argmin per group, and the exact-decimal means are
-    per-(group, cid, position) — one ``groupBy(g, cid, i)`` shuffle sums the
-    identical value sets. Cost: 1 probe + 1 seed collect + per Lloyd
-    iteration (1 linear assign pass + 1 means shuffle + 1 bounded collect)
-    for ALL groups — m separate trainings were the PQ operator's 1×
-    wall-clock hot spot (8.6 s → see SCALE.md), and IVF-PQ fuses its coarse
-    quantizer in as one more group."""
-    src = vecs.where(F.col("vec").isNotNull()).select("id", "vec")
-    train = vecs.select("id", "vec")
-    if train_max_rows is not None and iters > 0:
-        # limit-probe first, exactly as train_kmeans (counts INCLUDE null
-        # vectors — the per-group form counts its pre-filter input too).
-        # ``probe_frame`` (r17): a caller-supplied frame with IDENTICAL row
-        # count that is cheaper to evaluate — the residual trainer probes
-        # the raw non-null base rows instead of running the full residual
-        # mapInPandas pass just to count it (the residual frame maps
-        # non-null base rows 1:1). Decision and sample fraction unchanged.
-        probe = probe_frame if probe_frame is not None else vecs
-        if probe.limit(train_max_rows + 1).count() > train_max_rows:
-            n_total = probe.count()
-            denom = 1 << 20
-            num = max(1, (denom * train_max_rows) // n_total)
-            train = train.where(
-                F.pmod(F.xxhash64(F.col("id")), F.lit(denom)) < F.lit(num)
-            )
-    if train_max_rows is not None and iters > 1:
-        # the Lloyd loop re-evaluates `train` once per iteration (assign +
-        # means). For a raw scan that is cheap I/O, but for a DERIVED view
-        # (the residual frame: a full coarse-argmin mapInPandas per
-        # evaluation) each re-evaluation re-runs the computation. The train
-        # frame is bounded (≤ ~train_max_rows rows — either the hash sample
-        # fired or the corpus was already under the cap), so materialize it
-        # lazily once; values are unchanged. At ``iters == 1`` the frame is
-        # evaluated exactly once, so the checkpoint's block write bought
-        # nothing — skipped (r17).
-        train = train.localCheckpoint(eager=False)
-    max_k = max(k for _, _, k in groups)
-    # ``seed_rows`` (r17): pre-collected ``(cid, cvec)`` seed rows — must be
-    # the ≥ max_k smallest-id non-null rows of ``vecs`` (the residual
-    # trainer derives them driver-side from the base seeds through the SAME
-    # argmin+subtract arithmetic the residual frame applies, so one
-    # TakeOrdered job serves both trainings).
-    seeds = (
-        seed_rows
-        if seed_rows is not None
-        else src.orderBy("id")
-        .limit(max_k)
-        .select(F.col("id").alias("cid"), F.col("vec").alias("cvec"))
-        .collect()
-    )
-    mats = _grouped_mats_from_seeds(seeds, groups)
-    if not seeds:
-        return mats
-    starts = F.array(*[F.lit(s) for s, _, _ in groups])
-    widths = F.array(*[F.lit(w) for _, w, _ in groups])
-    for _ in range(iters):
-        assigned = _encode_grouped(train, mats, groups, keep_vec=True)
-        means = (
-            assigned.select("vec", F.posexplode("codes").alias("g", "cid"))
-            .select(
-                "g",
-                "cid",
-                F.posexplode(
-                    F.slice(
-                        "vec",
-                        F.element_at(starts, F.col("g") + 1),
-                        F.element_at(widths, F.col("g") + 1),
-                    )
-                ).alias("pos", "x"),
-            )
-            .groupBy("g", "cid", (F.col("pos") + 1).alias("i"))
-            .agg(
-                (
-                    F.sum(F.col("x").cast("decimal(38,9)")).cast("double")
-                    / F.count("*")
-                ).alias("v")
-            )
-        )
-        # bounded collect (Σ_g k_g × width_g rows — codebook metadata, not
-        # data): assemble the codeword ARRAYS on the driver instead of a
-        # second groupBy(g, cid) + collect_list shuffle whose output was
-        # collected anyway. v is the same per-(g, cid, position) aggregate
-        # and the driver position sort mirrors array_sort on struct(i, v)
-        # exactly (i unique per (g, cid)) — bit-identical mats. r16.
-        mats = _grouped_mats_from_pos_rows(means.collect(), len(groups))
-    return mats
-
-
-def _grouped_mats_from_seeds(seeds, groups):
-    """Seed rows (full vectors, ≥ max k of them) → per-group numpy mats:
-    group g seeds on its k smallest-cid rows' ``[start, start+width)``
-    slices."""
-    import numpy as np
-
-    mats = []
-    ordered = sorted(seeds, key=lambda r: r.cid)
-    for start, width, k in groups:
-        sub = ordered[:k]
-        cids = np.array([r.cid for r in sub], dtype=np.int64)
-        C = np.array(
-            [list(r.cvec)[start - 1 : start - 1 + width] for r in sub],
-            dtype=np.float64,
-        )
-        css = np.cumsum(C * C, axis=1)[:, -1] if sub else np.zeros(0)
-        mats.append((cids, C, css))
-    return mats
-
-
-def _grouped_mats_from_pos_rows(prows, n_groups: int):
-    """Per-position mean rows ``(g, cid, i, v)`` → per-group numpy mats.
-    The position sort reproduces ``array_sort(collect_list(struct(i, v)))``
-    exactly (i is unique per (g, cid))."""
-    import numpy as np
-
-    by_key: dict = {}
-    for r in prows:
-        by_key.setdefault((r.g, r.cid), []).append((r.i, r.v))
-    mats = []
-    for g in range(n_groups):
-        sub = sorted(
-            (cid, [v for _, v in sorted(vs)])
-            for (gg, cid), vs in by_key.items()
-            if gg == g
-        )
-        cids = np.array([cid for cid, _ in sub], dtype=np.int64)
-        C = np.array([vec for _, vec in sub], dtype=np.float64)
-        css = np.cumsum(C * C, axis=1)[:, -1] if sub else np.zeros(0)
-        mats.append((cids, C, css))
-    return mats
-
-
-def _slice_argmin(S, mat):
-    """Margin-banded BLAS prefilter + exact-fold rescore argmin of the rows
-    of ``S`` against codebook ``mat = (cids, C, css)`` with (exact d², cid)
-    tie-break — THE assignment kernel, bit-identical to
-    :func:`~.similarity._sql_assign` (same operation sequence the grouped
-    encoder always ran; extracted so the residual paths share it). Returns
-    ``(winning cids, winning codebook row indices)``."""
-    import numpy as np
-
-    cids, C, css = mat
-    daa = np.cumsum(S * S, axis=1)[:, -1]
-    approx = daa[:, None] - 2.0 * (S @ C.T) + css[None, :]
-    amin = approx.min(axis=1)
-    # same margin argument as _assign: the band provably contains the exact
-    # argmin and every exact tie
-    margin = 1e-6 * (np.abs(daa)[:, None] + np.abs(css)[None, :] + 1.0)
-    ri, ci = np.nonzero(approx <= (amin[:, None] + margin))
-    dab = np.cumsum(S[ri] * C[ci], axis=1)[:, -1]
-    d2 = daa[ri] - 2.0 * dab + css[ci]
-    order = np.lexsort((cids[ci], d2, ri))
-    first = np.unique(ri[order], return_index=True)[1]
-    win = ci[order[first]]
-    return cids[win], win
-
-
-def _encode_grouped(
-    vecs: DataFrame,
-    mats,
-    groups: list[tuple[int, int, int]],
-    keep_vec: bool = False,
-) -> DataFrame:
-    """Grouped-view generalization of :func:`_encode_from_mats`: one linear
-    ``mapInPandas`` pass emitting per row one code per GROUP (each group's
-    margin-banded exact-fold argmin over its ``[start, start+width)``
-    slice)."""
-    import numpy as np
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-    src = vecs.where(F.col("vec").isNotNull()).select("id", "vec")
-    fields = [src.schema["id"]]
-    if keep_vec:
-        fields.append(src.schema["vec"])
-    fields.append(StructField("codes", ArrayType(LongType())))
-    out_schema = StructType(fields)
-    if any(len(cids) == 0 for cids, _, _ in mats):
-        out = src.withColumn("codes", F.lit(None).cast(ArrayType(LongType())))
-        cols = ["id", "vec", "codes"] if keep_vec else ["id", "codes"]
-        return out.where(F.lit(False)).select(*cols)
-    bounds = [(s - 1, s - 1 + w) for s, w, _ in groups]
-
-    def encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            codes = np.empty((len(pdf), len(mats)), dtype=np.int64)
-            for g, ((lo, hi), mat) in enumerate(zip(bounds, mats)):
-                codes[:, g] = _slice_argmin(V[:, lo:hi], mat)[0]
-            cols = {"id": pdf["id"].to_numpy()}
-            if keep_vec:
-                cols["vec"] = pdf["vec"].to_numpy()
-            cols["codes"] = codes.tolist()
-            yield pd.DataFrame(cols)
-
-    return src.mapInPandas(encode, out_schema)
+from .vq import (
+    _codebook,
+    _codeword_rows,
+    _encode_grouped,
+    _query_sq_dists,
+    _slice_argmin,
+    _train_grouped_mats,
+)
 
 
 def _residual_frame(vecs: DataFrame, coarse_mat) -> DataFrame:
@@ -274,8 +71,6 @@ def _residual_frame(vecs: DataFrame, coarse_mat) -> DataFrame:
     explain, so the same code budget buys a finer reconstruction); the
     full-corpus encode recomputes residuals inside its own single pass
     (:func:`_encode_residual`) rather than materializing this."""
-    import numpy as np
-
     src = vecs.where(F.col("vec").isNotNull()).select("id", "vec")
     if len(coarse_mat[0]) == 0:
         return src.where(F.lit(False))
@@ -300,7 +95,6 @@ def _encode_residual(
     subspace the shared argmin kernel over the RESIDUAL slice. One linear
     pass, no join, no shuffle, no row expansion — same scan shape as
     :func:`_encode_grouped`, the residual arithmetic rides the batch."""
-    import numpy as np
     from pyspark.sql.types import (
         ArrayType,
         LongType,
@@ -345,6 +139,15 @@ def _encode_residual(
     return src.mapInPandas(encode, out_schema)
 
 
+def _subspace_luts(Q, mats, sd: int) -> list:
+    """ADC lookup tables: per subspace ``j``, ``(cids, d²[query, code])``
+    of the query rows' ``j``-th slice against codebook ``j``."""
+    return [
+        (mat[0], _query_sq_dists(Q[:, j * sd : (j + 1) * sd], mat))
+        for j, mat in enumerate(mats)
+    ]
+
+
 def _adc_candidates_residual(
     codes: DataFrame,
     pq_mats,
@@ -364,22 +167,13 @@ def _adc_candidates_residual(
     its list's LUT terms in fixed subspace order; per-batch partial
     top-``rerank`` by raw ``(adc, id)``, then the global rank window —
     exactly the :func:`_adc_candidates` shape with a cid-indexed LUT."""
-    import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     nq = len(qids)
-    luts: dict[int, list] = {}
-    all_probed = sorted({c for s in probed.values() for c in s})
-    for c in all_probed:
-        cent = np.array(coarse_rows[c], dtype=np.float64)
-        Rq = Q - cent[None, :]
-        per_j = []
-        for j, (cids, Cb, css) in enumerate(pq_mats):
-            Sq = Rq[:, j * sd : (j + 1) * sd]
-            qss = np.cumsum(Sq * Sq, axis=1)[:, -1]
-            dot = np.cumsum(Sq[:, None, :] * Cb[None, :, :], axis=2)[:, :, -1]
-            per_j.append((cids, qss[:, None] - 2.0 * dot + css[None, :]))
-        luts[c] = per_j
+    luts = {
+        c: _subspace_luts(Q - np.array(coarse_rows[c], dtype=np.float64), pq_mats, sd)
+        for c in sorted({c for s in probed.values() for c in s})
+    }
 
     id_field = codes.schema["id"]
     scan_schema = StructType(
@@ -437,23 +231,10 @@ def _adc_candidates_residual(
     )
 
 
-def _train_pq_mats(
-    vecs: DataFrame,
-    m: int,
-    n_codes: int,
-    dim: int,
-    iters: int,
-    train_max_rows: int | None,
-):
-    """The m subspace codebooks as a grouped fused training — see
-    :func:`_train_grouped_mats`."""
-    sd = dim // m
-    return _train_grouped_mats(
-        vecs,
-        [(j * sd + 1, sd, n_codes) for j in range(m)],
-        iters,
-        train_max_rows,
-    )
+def _subspace_groups(m: int, sd: int, k: int = 0) -> list[tuple[int, int, int]]:
+    """The ``m`` contiguous ``sd``-wide subspaces as kernel groups
+    ``(start, width, k)``; ``k`` matters only to training."""
+    return [(j * sd + 1, sd, k) for j in range(m)]
 
 
 def pq_codebooks(
@@ -466,69 +247,35 @@ def pq_codebooks(
 ) -> list[DataFrame]:
     """One deterministic k-means codebook per subspace over ``(id, vec)``
     rows: subspace ``j`` trains on ``vec[j*sd+1 : (j+1)*sd]`` (1-based
-    ``F.slice``; ``sd = dim // m``) and returns ``(cid, cvec)`` — exactly
-    :func:`~.similarity.train_kmeans` semantics per subspace (bit-equal,
-    asserted by test), so the unrolled-CTE SQL mirror applies per subspace.
-    Internally the m trainings are FUSED into one pipeline
-    (:func:`_train_pq_mats`); the returned frames are the materialized
-    codebooks (m × n_codes rows — driver-bounded like every centroid
-    table)."""
+    ``F.slice``; ``sd = dim // m``) and returns ``(cid, cvec)``, bit-equal
+    to :func:`~.similarity.train_kmeans` on that slice
+    (``tests/test_vq.py``), so the unrolled-CTE SQL mirror applies per
+    subspace. The m trainings run as one fused pipeline
+    (:func:`~.vq._train_grouped_mats`); the returned frames are the
+    materialized codebooks (m × n_codes rows — driver-bounded like every
+    centroid table)."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    sd = dim // m
-    mats = _train_pq_mats(vecs, m, n_codes, dim, iters, train_max_rows)
-    spark = vecs.sparkSession
+    groups = _subspace_groups(m, dim // m, n_codes)
+    mats = _train_grouped_mats(vecs, groups, iters, train_max_rows)
     from ..session import local_df
 
-    return [
-        local_df(spark,
-            [(int(c), [float(x) for x in row]) for c, row in zip(cids, C)],
-            "cid bigint, cvec array<double>",
-        )
-        for cids, C, _ in mats
-    ]
+    ddl = "cid bigint, cvec array<double>"
+    return [local_df(vecs.sparkSession, _codeword_rows(mat), ddl) for mat in mats]
 
 
 def _collect_books(books: list[DataFrame]):
-    """Collect each codebook ONCE (this runs the Lloyd job) into
-    ``(cids sorted int64[nc], C float64[nc,sd], css float64[nc])`` — css is
-    the exact-fold c·c shared by encode and the ADC lookup tables."""
-    import numpy as np
-
-    mats = []
-    for b in books:
-        rows = sorted(b.select("cid", "cvec").collect(), key=lambda r: r.cid)
-        cids = np.array([r.cid for r in rows], dtype=np.int64)
-        C = np.array([list(r.cvec) for r in rows], dtype=np.float64)
-        if len(rows):
-            css = np.cumsum(C * C, axis=1)[:, -1]
-        else:
-            css = np.zeros(0)
-        mats.append((cids, C, css))
-    return mats
-
-
-def _encode_from_mats(
-    vecs: DataFrame, mats, sd: int, keep_vec: bool = False
-) -> DataFrame:
-    """(id, codes array<bigint>) — one linear ``mapInPandas`` pass; per
-    subspace the margin-banded BLAS prefilter + exact-fold rescore argmin
-    with (exact d², cid) tie-break, bit-identical to per-subspace
-    :func:`~.similarity._sql_assign`. NULL vectors are dropped (as in
-    ``_assign``); an empty codebook (empty corpus) yields an empty result
-    with the output schema rather than raising (ADVICE r9 precedent).
-    ``keep_vec`` adds the vec column through (the fused Lloyd loop needs
-    (vec, codes) to compute means). Uniform-subspace special case of
-    :func:`_encode_grouped`."""
-    groups = [(j * sd + 1, sd, 0) for j in range(len(mats))]
-    return _encode_grouped(vecs, mats, groups, keep_vec)
+    """Collect each codebook ONCE (this runs the Lloyd job) into a kernel
+    codebook ``(cids, C, css)``."""
+    return [_codebook(b.select("cid", "cvec").collect()) for b in books]
 
 
 def pq_encode(vecs: DataFrame, books: list[DataFrame], dim: int) -> DataFrame:
     """Public encode entry: ``(id, vec)`` + trained codebooks → ``(id,
-    codes)``. Collects the codebooks (bounded: ``n_codes × dim`` doubles)."""
-    mats = _collect_books(books)
-    return _encode_from_mats(vecs, mats, dim // len(books))
+    codes)``, one linear ``mapInPandas`` pass (:func:`~.vq._encode_grouped`).
+    Collects the codebooks (bounded: ``n_codes × dim`` doubles)."""
+    groups = _subspace_groups(len(books), dim // len(books))
+    return _encode_grouped(vecs, _collect_books(books), groups)
 
 
 def _adc_candidates(
@@ -553,15 +300,9 @@ def _adc_candidates(
     query to its own probed inverted lists (IVF-PQ serving; requires a
     ``cid`` column); ``exclude_self`` drops id == query_id (self-query
     shape)."""
-    import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    lut = []
-    for j, (cids, C, css) in enumerate(mats):
-        Sq = Q[:, j * sd : (j + 1) * sd]
-        qss = np.cumsum(Sq * Sq, axis=1)[:, -1]
-        dot = np.cumsum(Sq[:, None, :] * C[None, :, :], axis=2)[:, :, -1]
-        lut.append((cids, qss[:, None] - 2.0 * dot + css[None, :]))
+    lut = _subspace_luts(Q, mats, sd)
 
     id_field = codes.schema["id"]
     scan_schema = StructType(
@@ -644,7 +385,6 @@ def pq_topk(
     codes table with per-batch partial top-``rerank`` → exact cosine rescore
     of the broadcast candidates → top-k. Output matches the other ANN tiers:
     ``(query_id, neighbor_id, cos_sim, rank)``."""
-    import numpy as np
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
     vecs = df.select(
@@ -654,8 +394,9 @@ def pq_topk(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sd = dim // m
-    mats = _train_pq_mats(vecs, m, n_codes, dim, iters, train_max_rows)
-    codes = _encode_from_mats(vecs, mats, sd)
+    groups = _subspace_groups(m, sd, n_codes)
+    mats = _train_grouped_mats(vecs, groups, iters, train_max_rows)
+    codes = _encode_grouped(vecs, mats, groups)
 
     queries = vecs.filter(F.col("id").isin(query_ids)).select(
         F.col("id").alias("query_id"), F.col("vec").alias("qvec")

@@ -22,6 +22,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from .vq import (
+    _codebook,
+    _codeword_rows,
+    _encode_grouped,
+    _seed_rows,
+    _train_grouped_mats,
+)
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -541,81 +549,20 @@ def sq_dist_pairs_udf():
 
 
 def _assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment as a LINEAR map-side scan.
-
-    The K centroids are collected (bounded — the same K-rows bound the
-    previous form relied on for its broadcast) into a ``mapInPandas``
-    closure; per Arrow batch one BLAS matmul yields approximate distances
-    to every centroid, a margin that dominates the matmul-vs-fold float
-    difference keeps every possible exact argmin AND every exact tie, and
-    only those survivors (almost always one) are rescored with the
-    strictly-sequential ``np.cumsum`` fold. The final argmin breaks ties on
-    (exact dist², cid) — BIT-IDENTICAL to :func:`_sql_assign`'s oracle
-    window, proven unchanged by every k-means-family oracle entry.
-
-    r9 rewrite (the 100× probe's hot spot): the previous corpus × K
-    ``crossJoin`` + per-id ``row_number`` window materialized N·K rows,
-    pushed BOTH vectors of every pair through Arrow (at the 100× probe:
-    89M rows × 128 doubles), and shuffled the expanded set for the window.
-    This form expands nothing, shuffles nothing, and moves each vector
-    through Arrow exactly once — O(N·K) flops stay inside one BLAS call
-    per batch.
-
-    NULL vectors are dropped (as before: a NULL distance would otherwise
-    win the NULLS-FIRST rank and assign them to an arbitrary centroid)."""
-    import numpy as np
-    from pyspark.sql.types import StructType
-
-    crows = sorted(cents.select("cid", "cvec").collect(), key=lambda r: r.cid)
-    src = vecs.where(F.col("vec").isNotNull()).select("id", "vec")
-    if not crows:
-        # empty or all-NULL-vector corpus trains zero centroids; preserve
-        # the pre-r9 lazy-crossJoin behavior (empty result, (id, vec, cid)
-        # schema) instead of raising — empty slices/increments are a
-        # legitimate pipeline state (ADVICE r9)
-        return src.withColumn(
-            "cid", F.lit(None).cast(cents.schema["cid"].dataType)
-        ).where(F.lit(False))
-    cids = np.array([r.cid for r in crows], dtype=np.int64)
-    C = np.array([list(r.cvec) for r in crows], dtype=np.float64)
-    # exact per-centroid c·c via the sequential fold (shared by every batch)
-    css = np.cumsum(C * C, axis=1)[:, -1]
-
-    out_schema = StructType(
-        [src.schema["id"], src.schema["vec"], cents.schema["cid"]]
+    """Nearest-centroid assignment ``(id, vec, cid)`` as a linear map-side
+    scan: the ``K`` centroids are collected (bounded) into the one-group
+    :func:`~.vq._encode_grouped` pass, whose single code is ``cid``. The
+    argmin breaks ties on (exact dist², cid), bit-identical to
+    :func:`_sql_assign`'s oracle window. ``cid`` keeps the centroid frame's
+    id type. NULL vectors are dropped, and an empty centroid set gives an
+    empty result."""
+    mat = _codebook(cents.select("cid", "cvec").collect())
+    enc = _encode_grouped(vecs, [mat], [(1, mat[1].shape[-1], 0)], keep_vec=True)
+    return enc.select(
+        "id",
+        "vec",
+        F.element_at("codes", 1).cast(cents.schema["cid"].dataType).alias("cid"),
     )
-
-    def assign_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(cid=pd.Series([], dtype="int64"))
-                continue
-            V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            daa = np.cumsum(V * V, axis=1)[:, -1]
-            approx = daa[:, None] - 2.0 * (V @ C.T) + css[None, :]
-            amin = approx.min(axis=1)
-            # margin: matmul uses pairwise summation, the fold is strictly
-            # sequential; their difference is ~dim·ulp·magnitude (≈1e-11
-            # at dim 64), so a 1e-6-relative band provably contains the
-            # exact argmin and every exact tie
-            margin = 1e-6 * (np.abs(daa)[:, None] + np.abs(css)[None, :] + 1.0)
-            ri, ci = np.nonzero(approx <= (amin[:, None] + margin))
-            dab = np.cumsum(V[ri] * C[ci], axis=1)[:, -1]
-            d2 = daa[ri] - 2.0 * dab + css[ci]
-            order = np.lexsort((cids[ci], d2, ri))  # by (row, exact d², cid)
-            first = np.unique(ri[order], return_index=True)[1]
-            best_cid = cids[ci[order[first]]]  # rows appear sorted 0..n-1
-            yield pd.DataFrame(
-                {
-                    # positional (to_numpy) — never let pandas re-align a
-                    # non-Range batch index against the positional cid array
-                    "id": pdf["id"].to_numpy(),
-                    "vec": pdf["vec"].to_numpy(),
-                    "cid": best_cid,
-                }
-            )
-
-    return src.mapInPandas(assign_batches, out_schema)
 
 
 def train_kmeans(
@@ -627,80 +574,37 @@ def train_kmeans(
     """Deterministic Lloyd k-means over ``(id, vec)`` rows → ``(cid, cvec)``.
 
     Fully deterministic so a DuckDB oracle can mirror it: seed centroids are
-    the ``n_centroids`` smallest-id vectors (no RNG), each Lloyd iteration
-    recomputes per-cluster means with EXACT decimal sums
+    the ``n_centroids`` smallest-id non-NULL vectors (no RNG), each Lloyd
+    iteration recomputes per-cluster means with EXACT decimal sums
     (``sum(cast(x as decimal(38,9)))/count`` — order-independent, hence
     bit-stable across partitionings and engines), and every argmin breaks
     ties on id. Above ``train_max_rows`` the Lloyd loop trains on a
     DETERMINISTIC hash-bucket sample of ~that size
     (``xxhash64(id) % denom < num`` — no RNG, partitioning-independent);
     below the threshold (every test/oracle scale) the sample is the whole
-    corpus, so the SQL mirror is unchanged. ``None`` disables sampling."""
-    train = vecs
-    if train_max_rows is not None and iters > 0:
-        # limit-probe first: the full count only runs when actually oversized
-        if vecs.limit(train_max_rows + 1).count() > train_max_rows:
-            n_total = vecs.count()
-            denom = 1 << 20
-            num = max(1, (denom * train_max_rows) // n_total)
-            train = vecs.where(
-                F.pmod(F.xxhash64(F.col("id")), F.lit(denom)) < F.lit(num)
-            )
-    # NULL vectors can't seed a centroid (an undefined cvec would poison
-    # every distance); _assign drops them from assignment for the same
-    # reason, so filtering here keeps seeds ⊆ assignable rows
-    cents = (
-        vecs.where(F.col("vec").isNotNull())
-        .orderBy("id")
-        .limit(n_centroids)
-        .select(F.col("id").alias("cid"), F.col("vec").alias("cvec"))
-    )
-    # every iteration materializes the (bounded: n_centroids × dim rows)
-    # per-position means and assembles the centroid ARRAYS on the driver —
-    # one groupBy shuffle per iteration instead of two (the previous form
-    # regrouped per cid with array_sort(collect_list(struct)) just to
-    # rebuild arrays the driver was about to collect anyway). Values are
-    # identical: v is the same per-(cid, position) aggregate, and the
-    # driver sort by position mirrors array_sort on struct(i, v) exactly
-    # (i is unique per cid). r16, guide §2.2 "shuffle fewer bytes" / §5.
+    corpus, so the SQL mirror is unchanged. ``None`` disables sampling.
+
+    This is the one-group ``(1, dim, n_centroids)`` case of
+    :func:`~.vq._train_grouped_mats`. The centroids come back as a local
+    relation (bounded: ``n_centroids`` rows), so consumers that reference
+    them several times never re-run the training; ``cid`` has the id
+    column's type."""
     from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
     from ..session import local_df
 
+    seeds = _seed_rows(vecs, n_centroids)
+    dim = len(seeds[0].cvec) if seeds else 0
+    [mat] = _train_grouped_mats(
+        vecs, [(1, dim, n_centroids)], iters, train_max_rows, seed_rows=seeds
+    )
     cent_schema = StructType(
         [
             StructField("cid", vecs.schema["id"].dataType, True),
             StructField("cvec", ArrayType(DoubleType(), True), True),
         ]
     )
-    for _ in range(iters):
-        assigned = _assign(train, cents)
-        ex = assigned.select("cid", F.posexplode("vec").alias("pos", "x"))
-        means = ex.groupBy("cid", (F.col("pos") + 1).alias("i")).agg(
-            (
-                F.sum(F.col("x").cast("decimal(38,9)")).cast("double") / F.count("*")
-            ).alias("v")
-        )
-        by_cid: dict = {}
-        for r in means.collect():
-            by_cid.setdefault(r.cid, []).append((r.i, r.v))
-        cents = local_df(
-            vecs.sparkSession,
-            [
-                (cid, [v for _, v in sorted(vs)])
-                for cid, vs in sorted(by_cid.items())
-            ],
-            cent_schema,
-        )
-    if iters > 0:
-        return cents
-    # iters=0: the seeds themselves are the centroids — materialize them as
-    # a LOCAL relation (bounded: n_centroids rows). Every consumer
-    # references the centroid frame several times (_assign collects it,
-    # probe rankings broadcast it, index builds write it); left lazy, EACH
-    # of those actions re-ran the seeding job. Values round-trip the driver
-    # unchanged — bit-identical.
-    return local_df(vecs.sparkSession, cents.collect(), cents.schema)
+    return local_df(vecs.sparkSession, _codeword_rows(mat), cent_schema)
 
 
 def ivf_topk(
@@ -717,8 +621,8 @@ def ivf_topk(
     """IVF ANN: k-means inverted lists, ``nprobe``-list probing, exact rescore.
 
     Training is :func:`train_kmeans` (deterministic seeding, exact decimal
-    means, capped training sample — see its docstring); assignment is a
-    broadcast cross-join (N×K rows, map-side) so only seeding + final list
+    means, capped training sample — see its docstring); assignment is
+    :func:`_assign`'s linear map-side pass, so only seeding + final list
     assignment touch the full corpus."""
     vecs = df.select(
         F.col(id_col).alias("id"),

@@ -38,6 +38,7 @@ Cuts compile here and nowhere else (the reference's query_ir.rs:180-243):
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -163,7 +164,10 @@ class PlanBuilder:
         # any data change requires the generation bump, and the bump
         # invalidates every cached plan here. Keyed on the registry
         # generation so a swapped table (aggnav hist/fact swap, /flush
-        # reload) invalidates plans built on the old frame.
+        # reload) invalidates plans built on the old frame; the first
+        # dataframe() call that sees a newer generation drops the older
+        # entries (_drop_stale), so they stop pinning old file listings and
+        # checkpoints.
         self._plan_cache = Lru(256)
         # single-flight (r12, VERDICT r11 #3 cold-plan cliff): under a cold
         # 100-client burst several threads miss the plan cache on the SAME
@@ -181,6 +185,10 @@ class PlanBuilder:
         # below the inner joins to the scan (plan-shape tests pin that the
         # executed plans are unchanged)
         self._template_cache = Lru(64)
+        #: the registry generation _drop_stale last swept both caches for;
+        #: _gen_lock orders that sweep against _cache_put
+        self._cached_gen = registry.generation
+        self._gen_lock = threading.Lock()
 
     # observability for the warm-path tests/probes (r15, VERDICT r14
     # next-round #7): a standing test asserts a warmup-replayed shape
@@ -605,7 +613,10 @@ class PlanBuilder:
         # dataclass repr is deterministic and covers every field; a missed
         # hit (hand-built Query with unusual field order) costs a rebuild,
         # never a wrong plan
-        key = (self.registry.generation, cube_name, repr(query))
+        gen = self.registry.generation
+        if gen != self._cached_gen:
+            self._drop_stale()
+        key = (gen, cube_name, repr(query))
         df = self._plan_cache.get(key)
         if df is not None:
             return df
@@ -616,7 +627,7 @@ class PlanBuilder:
         # failed build re-raises its error here, in this thread)
         try:
             df = self._build_dataframe(cube_name, query)
-            self._plan_cache.put(key, df)
+            self._cache_put(self._plan_cache, key, df)
         finally:
             if leader:
                 self._plan_flight.done(key, df)
@@ -847,8 +858,27 @@ class PlanBuilder:
         joined = self._template_cache.get(key)
         if joined is None:
             joined = self._join_fact(specs, self.registry.load(cube.table))
-            self._template_cache.put(key, joined)
+            self._cache_put(self._template_cache, key, joined)
         return joined
+
+    def _drop_stale(self) -> None:
+        """Drop every plan and template of an older registry generation.
+        Only the references go, with no ``unpersist``: an in-flight request
+        or a single-flight follower may still hold a dropped plan, and the
+        checkpoint blocks it reads cannot be recomputed. Spark's
+        ContextCleaner frees them once the plan is unreachable."""
+        with self._gen_lock:
+            gen = self._cached_gen = self.registry.generation
+            for cache in (self._plan_cache, self._template_cache):
+                cache.drop_where(lambda key: key[0] != gen)
+
+    def _cache_put(self, cache: Lru, key: tuple, value) -> None:
+        """Cache ``value`` under ``key`` (its generation first) unless the
+        registry has moved on since it was built: such a plan still goes
+        back to its caller, but it is never cached."""
+        with self._gen_lock:
+            if key[0] == self.registry.generation:
+                cache.put(key, value)
 
     def _two_phase_plan(
         self,

@@ -7,7 +7,8 @@ Endpoints (tesseract-server/src/app.rs route table):
 - ``GET /data.{fmt}?cube=..&drilldowns=Year&measures=Quantity&Year=2017`` — logic layer
 - ``GET /cubes/{cube}/members.{fmt}?level=Dim.Hier.Level``
 - ``GET /cubes/{cube}/diagnosis`` — orphan FK / duplicate key counts
-- ``GET /flush?secret=..`` — re-create the plan builder (schema hot reload)
+- ``GET /flush?secret=..`` — drop the response cache and start a new registry
+  generation, which every plan and member cache follows (data reload)
 
 Responses stream chunk-by-chunk via the formatters' ``toLocalIterator`` path —
 the reference's chunked-transfer behavior (format_stream.rs; SURVEY.md §2.8).
@@ -463,15 +464,13 @@ class EngineHandler(BaseHTTPRequestHandler):
         if parts == ["flush"]:
             if self.flush_secret and params.get("secret") != self.flush_secret:
                 return self._send_json({"error": "bad secret"}, 403)
-            type(self).logic = LogicLayer(
-                self.builder, self.logic.config, navigator=self.navigator
-            )
             self.cache.clear()
             # drop parquet-memoized file listings + bump the registry
-            # generation (invalidates the builder's plan cache and every
-            # response-cache / single-flight key in flight): flush is
-            # the reference's "schema/data changed, reload" hook, and a
-            # dataset rewritten on disk must be re-listed (r11 review)
+            # generation (invalidates the builder's plan caches, the logic
+            # layer's member caches and every response-cache /
+            # single-flight key in flight): flush is the reference's
+            # "schema/data changed, reload" hook, and a dataset rewritten
+            # on disk must be re-listed
             self.builder.registry.refresh_files()
             return self._send_json({"flushed": True})
 
